@@ -10546,11 +10546,13 @@ WITH iv AS (
 d AS (SELECT s AS t, 1 AS dd FROM iv UNION ALL SELECT e, -1 FROM iv),
 r AS (SELECT t, sum(dd) OVER (ORDER BY t) AS run FROM d),
 h AS (SELECT date_trunc('hour', t) AS grain_start,
-             max(run) AS peak, arg_max(run, t) AS exit_level
+             max(run) AS peak, arg_max(run, t) AS exit_level,
+             min(t) AS first_t
       FROM r GROUP BY 1)
 SELECT grain_start,
        CAST(greatest(
-         coalesce(lag(exit_level) OVER (ORDER BY grain_start), 0),
+         CASE WHEN first_t > grain_start THEN
+           coalesce(lag(exit_level) OVER (ORDER BY grain_start), 0) END,
          peak) AS BIGINT) AS max_concurrency
 FROM h
 """,

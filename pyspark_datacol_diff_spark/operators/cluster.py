@@ -132,7 +132,11 @@ def connected_components(
     collect that materializes the round's ``localCheckpoint``), and
     the separate init-digest job the cross-round hash-compare needed
     (one extra job per call, plus a full hash pass over the label
-    frame) is gone. The identity-label round is fused into
+    frame) is gone. That exact witness covers non-NULL node ids only:
+    a NULL id's group is still watched through a cross-round
+    ``xxhash64`` of its label, so on graphs with a NULL node a 2^-64
+    hash collision on a changed label could end the loop one round
+    early. The identity-label round is fused into
     initialization: labels start at each node's neighborhood min (what
     round 1 used to compute from identity labels), saving one full
     join + aggregate + materialization round.
@@ -193,9 +197,9 @@ def connected_components(
         # Convergence witness, computed INSIDE each round's job: the
         # self-loop row (s == d) in node d's group carries d's previous
         # label, so `comp != __old` is an exact per-node changed flag —
-        # deterministic (no hash-collision caveat), type-agnostic, and
-        # free of the init-digest job the cross-round hash-compare
-        # needed. A NULL node id never matches the equi-join (its
+        # for non-NULL ids deterministic (no hash-collision caveat),
+        # type-agnostic, and free of the init-digest job the
+        # cross-round hash-compare needed. A NULL node id never matches the equi-join (its
         # self-loop row is dropped, so its __old is NULL every round);
         # such a group is excluded from the changed count and watched
         # through a hash of its label instead, compared across rounds —

@@ -996,6 +996,12 @@ def golden_record(
     flds = list(fields)
     if not flds:
         raise ValueError("fields must be non-empty")
+    if cluster_col in flds:
+        # the cluster column is the election's grouping key, not an
+        # electable field: it would appear twice in every later select
+        raise ValueError(
+            f"fields must not contain the cluster column {cluster_col!r}"
+        )
     # the input feeds both the size/rep aggregate and the unpivot, and
     # the cluster-grain members frame feeds both the election semi
     # join and the final left join — the planner reuses neither, so
@@ -1003,8 +1009,8 @@ def golden_record(
     # + components fixpoint join) re-executes per reference. Project
     # to the consumed columns first, then checkpoint lazily (the
     # cluster-module convention).
-    # dict.fromkeys-dedupe (ADVICE r11): `fields` may legitimately
-    # include the id or cluster column; a duplicated select would make
+    # dict.fromkeys-dedupe (ADVICE r11): `fields` may include the id
+    # column (elected like any field); a duplicated select would make
     # every later reference ambiguous (AnalysisException)
     df = df.select(*dict.fromkeys([cluster_col, id_col, *flds])).localCheckpoint(
         eager=False

@@ -152,6 +152,7 @@ def interval_max_concurrency(
             F.max("__run").alias("__peak_at_points"),
             # RANGE-frame ties share one __run value, so max_by is stable
             F.max_by("__run", "__t").alias("__level_at_exit"),
+            F.min("__t").alias("__first_t"),
         )
         # branch point: the day-exit gather below materializes this
         # eagerly and the returned frame re-reads it — without the
@@ -185,15 +186,21 @@ def interval_max_concurrency(
     w_day = Window.partitionBy(F.to_date("grain_start")).orderBy(
         "grain_start"
     )
+    # the inherited level stands only until the cell's first event: an
+    # event AT grain_start already folds it into that point's __run
+    # (half-open — an interval ending exactly there no longer counts)
+    inherited = F.when(
+        F.col("__first_t") > F.col("grain_start"),
+        F.coalesce(
+            F.lag("__level_at_exit").over(w_day),
+            day_entry[F.to_date("grain_start")],
+        ),
+    )
     return per_cell.select(
         "grain_start",
-        F.greatest(
-            F.coalesce(
-                F.lag("__level_at_exit").over(w_day),
-                day_entry[F.to_date("grain_start")],
-            ),
-            F.col("__peak_at_points"),
-        ).cast("long").alias(out_col),
+        F.greatest(inherited, F.col("__peak_at_points"))
+        .cast("long")
+        .alias(out_col),
     )
 
 

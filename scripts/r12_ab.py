@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
-"""Round-12 same-session A/B: time one query under two (or more) env
-toggle settings, interleaved A B A B ... so box drift cancels.
+"""Round-12 same-session A/B: time one query under two env toggle
+settings, interleaved in ABBA order (A B, B A, A B, ...) so a monotonic
+drift of the host's speed weighs on both arms alike.
 
 Usage:
   python3 scripts/r12_ab.py <query> <ENV_VAR> <valA> <valB> [reps]
 
 Each arm: warm-up once, then `reps` timed runs interleaved with the
 other arm's runs (noop sink, quiesce between every run — the bench
-methodology). Reports per-arm min/median.
+methodology). Reports per-arm min/median. ``ENV_VAR`` is restored to
+its previous value (or removed) on exit.
 """
 
 from __future__ import annotations
@@ -45,17 +47,24 @@ def main() -> None:
         quiesce_session(spark)
         return dt
 
-    # warm both arms (JIT for both plan shapes)
-    for v in (val_a, val_b):
-        os.environ[var] = v
-        run_once()
-
+    saved = os.environ.get(var)
     samples: dict[str, list[float]] = {val_a: [], val_b: []}
-    for _ in range(reps):
+    try:
+        # warm both arms (JIT for both plan shapes)
         for v in (val_a, val_b):
             os.environ[var] = v
-            spark.sparkContext.setJobDescription(f"ab:{query}:{var}={v}")
-            samples[v].append(run_once())
+            run_once()
+        for rep in range(reps):
+            order = (val_a, val_b) if rep % 2 == 0 else (val_b, val_a)
+            for v in order:
+                os.environ[var] = v
+                spark.sparkContext.setJobDescription(f"ab:{query}:{var}={v}")
+                samples[v].append(run_once())
+    finally:
+        if saved is None:
+            os.environ.pop(var, None)
+        else:
+            os.environ[var] = saved
 
     out = {}
     for v, ss in samples.items():

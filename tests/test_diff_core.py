@@ -159,6 +159,105 @@ def test_apply_diff_round_trip(spark, employee_pair):
     assert want.exceptAll(rebuilt).count() == 0
 
 
+def _apply_diff_two_branch(s1, diff_df, pk, compare_cols):
+    """Reference: the former two-branch ``apply_diff`` — s1 inner-joined
+    to the matched diff rows, unioned with the ``S2_ONLY`` rows projected
+    out of the diff (which references the diff twice)."""
+
+    def patch():
+        return F.map_from_entries(
+            F.transform(
+                F.col("CompColArr"),
+                lambda e: F.struct(
+                    e["col_name"].alias("key"), e["s2_value"].alias("value")
+                ),
+            )
+        )
+
+    changed = diff_df.filter(F.col("Flag").isin("", "NODIFF")).select(
+        *[F.col(k + "_s1").alias(k) for k in pk], patch().alias("__patch")
+    )
+    patched = s1.join(changed, list(pk), "inner").select(
+        *[F.col(k).cast("string").alias(k) for k in pk],
+        *[
+            F.coalesce(
+                F.element_at(F.col("__patch"), F.lit(c)), F.col(c).cast("string")
+            ).alias(c)
+            for c in compare_cols
+        ],
+    )
+    inserted = diff_df.filter(F.col("Flag") == "S2_ONLY").select(
+        *[F.col(k + "_s2").cast("string").alias(k) for k in pk],
+        *[F.element_at(patch(), F.lit(c)).alias(c) for c in compare_cols],
+    )
+    return patched.unionByName(inserted)
+
+
+_APPLY_SCHEMA = "k1 long, k2 string, v long, s string"
+_APPLY_S1 = [
+    (1, "a", 10, "x"),  # unchanged
+    (1, "b", 20, "y"),  # both values changed to NULL in s2
+    (2, "a", 30, "z"),  # s changed; duplicate key in s1 ...
+    (2, "a", 31, "z2"),  # ... fans out through both joins
+    (3, "a", 40, "q"),  # deleted
+    (None, "a", 50, "n1"),  # NULL key part on the s1 side
+    (4, None, 60, "n2"),
+]
+_APPLY_S2 = [
+    (1, "a", 10, "x"),
+    (1, "b", None, None),
+    (2, "a", 30, "w"),
+    (5, "a", 70, "new"),  # inserted, duplicate key in s2
+    (5, "a", 71, "new2"),
+    (None, "b", 80, "n3"),  # NULL key part on the s2 side
+    (6, None, 90, None),
+]
+
+
+@pytest.mark.parametrize("case", ["mixed", "one_scan", "empty_s1", "empty_s2"])
+def test_apply_diff_matches_two_branch_formulation(spark, case):
+    from collections import Counter
+
+    from pyspark_datacol_diff_spark.operators.diff import apply_diff
+
+    pk, cols = ["k1", "k2"], ["v", "s"]
+    if case == "one_scan":
+        # s1 and s2 share one scan: the join back to s1 is a self-join
+        base = spark.createDataFrame(_APPLY_S1 + _APPLY_S2[3:], _APPLY_SCHEMA)
+        s1 = base.filter(F.col("k1") != 5)
+        s2 = base.filter(F.col("k1") != 3).withColumn(
+            "s", F.when(F.col("k1") == 2, F.lit("w")).otherwise(F.col("s"))
+        )
+    else:
+        s1 = spark.createDataFrame(
+            [] if case == "empty_s1" else _APPLY_S1, _APPLY_SCHEMA
+        )
+        s2 = spark.createDataFrame(
+            [] if case == "empty_s2" else _APPLY_S2, _APPLY_SCHEMA
+        )
+    d = diff(s1, s2, pk, carry_unmatched=True)
+    got = apply_diff(s1, d, pk, cols)
+    want = _apply_diff_two_branch(s1, d, pk, cols)
+    assert got.schema == want.schema
+    rows = Counter(tuple(r) for r in got.collect())
+    assert rows == Counter(tuple(r) for r in want.collect())
+    if case == "empty_s2":
+        assert not rows
+    else:
+        # inserts (key 5) always come through; NULL-key s2 rows never do
+        assert rows[("5", "a", "70", "new")] == 1
+        assert all(r[0] is not None and r[1] is not None for r in rows)
+    if case == "mixed":
+        # duplicate s1 key: 2 diff rows x 2 s1 rows, each patched by its
+        # own diff row; a value changed to NULL falls back to the s1
+        # value (element_at cannot tell a NULL s2_value from a missing
+        # entry)
+        assert rows[("2", "a", "30", "w")] == 3
+        assert rows[("2", "a", "31", "w")] == 1
+        assert rows[("1", "b", "20", "y")] == 1
+        assert sum(rows.values()) == 8
+
+
 def test_table_digest_detects_any_single_change(spark):
     from pyspark_datacol_diff_spark.operators.diff import (
         digests_equal,

@@ -137,7 +137,7 @@ def test_survivor_corpus_victim_join_is_aqe_sized(qs, spark):
     assert "CartesianProduct" not in plan
 
 
-def test_apply_diff_single_join_per_branch(spark):
+def test_apply_diff_plans_diff_once(spark):
     from pyspark_datacol_diff_spark.operators.diff import apply_diff
 
     o = spark.read.parquet(f"{SF}/orders.parquet")
@@ -145,14 +145,16 @@ def test_apply_diff_single_join_per_branch(spark):
     d = diff(o, o, ["o_orderkey"], compare_cols=cols, carry_unmatched=True)
     out = apply_diff(o, d, ["o_orderkey"], cols)
     plan = P.physical_plan(out)
-    # each union branch re-plans the (lazy) diff; Catalyst then narrows
-    # the full-outer join per branch via the Flag filter (left-outer for
-    # the patched branch — the S1_ONLY/NODIFF/'' flags imply s1 keys
-    # non-null). What must hold: a bounded number of equi-joins and no
-    # cross product. Callers reusing one diff for both apply branches
-    # persist it first, like any branching plan.
-    joins = P.count_op(out, "SortMergeJoin") + P.count_op(out, "BroadcastHashJoin")
-    assert joins <= 4, plan
+    # the diff is referenced once: its full-outer join appears once and
+    # the only other equi-join is the left join back to s1 — no union
+    # branch re-plans the diff
+    assert plan.count("FullOuter") == 1, plan
+    joins = sum(
+        P.count_op(out, op)
+        for op in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin")
+    )
+    assert joins <= 2, plan
+    assert "Union" not in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 

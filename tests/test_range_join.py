@@ -155,7 +155,7 @@ class TestIntervalMaxConcurrency:
         assert got == {"2024-01-01 00:00:00": 1}
 
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 
@@ -174,6 +174,8 @@ from hypothesis import strategies as st
         max_size=25,
     ),
 )
+# an interval ending exactly on an hour start: that hour's peak is 0
+@example(ivs=[(0, 3600)])
 def test_max_concurrency_matches_brute_force(spark, ivs):
     """Property: for ANY interval set (zero-length, touching, and
     hour-spanning included), per-hour peaks equal a brute-force

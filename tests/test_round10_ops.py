@@ -348,6 +348,19 @@ class TestRound10Operators:
         r = golden_record(d, "comp", "doc_id", ["lang"]).collect()[0]
         assert r["lang"] is None
 
+    def test_golden_record_rejects_cluster_col_in_fields(self, spark):
+        from pyspark_datacol_diff_spark.operators.dedup import golden_record
+
+        d = spark.createDataFrame(
+            [(1, 1, "en"), (1, 2, "en")],
+            "comp long, doc_id long, lang string",
+        )
+        with pytest.raises(ValueError, match="cluster column 'comp'"):
+            golden_record(d, "comp", "doc_id", ["lang", "comp"])
+        # the id column stays electable (string space, ties to smallest)
+        r = golden_record(d, "comp", "doc_id", ["lang", "doc_id"]).collect()[0]
+        assert (r["lang"], r["doc_id"], r["rep_doc_id"]) == ("en", "1", 1)
+
     def test_blocking_volume(self, spark):
         from pyspark_datacol_diff_spark.operators.dedup import (
             blocking_volume,
