@@ -5141,10 +5141,10 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_dedup_cluster_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERS: connected components over the exact-Jaccard
-    pair graph (operators/cluster.py — iterative min-label propagation,
-    lineage-truncated per round). (doc_id, comp) where comp is the min
-    doc id of the component; oracle is a DuckDB recursive CTE reaching
-    the same fixpoint."""
+    pair graph (operators/cluster.py — min-label propagation with
+    hooking and pointer jumping, lineage-truncated per round).
+    (doc_id, comp) where comp is the min doc id of the component;
+    oracle is a DuckDB recursive CTE reaching the same fixpoint."""
     pairs = _ngram_pairs(spark, sf_dir)
     return CC.connected_components(pairs, "id_a", "id_b").select(
         F.col("node").alias("doc_id"), F.col("comp")
@@ -5152,16 +5152,14 @@ def _q_dedup_cluster_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_cc_star_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-contraction connected components (operators/cluster.py:
-    connected_components_star — the declared O(log n) high-diameter
-    fallback) over the SAME exact-Jaccard pair graph as
+    """Connected components over the SAME exact-Jaccard pair graph as
     dedup_cluster_docs, with the identical output contract (comp = min
     doc id of the component) and therefore the identical recursive-CTE
-    oracle. Registering it makes the fallback's correctness driver-
-    verified and puts it in the 10x scale smoke, instead of being a
-    tested-but-never-scale-measured claim."""
+    oracle. The name is kept from the deleted large-star/small-star
+    operator so that recorded correctness, bench and 10x-smoke results
+    stay comparable across rounds."""
     pairs = _ngram_pairs(spark, sf_dir)
-    return CC.connected_components_star(pairs, "id_a", "id_b").select(
+    return CC.connected_components(pairs, "id_a", "id_b").select(
         F.col("node").alias("doc_id"), F.col("comp")
     )
 
@@ -6049,17 +6047,16 @@ def _q_srp_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (drop_near_dups) -> per-label corpus census. The oracle replays
     EVERY stage in DuckDB (md5 planes, integer dots, banding, Hamming,
     recursive-CTE components, survivor anti-membership) — two engines,
-    one bit-identical pipeline. Components via the STAR variant: weak
-    Hamming<=8 edges over near-uniform synthetic vectors chain into a
-    pair graph whose diameter exceeds propagation's max_iter — exactly
-    the high-diameter regime connected_components_star exists for
-    (O(log n) rounds, measured in the 10x smoke at ratio 1.5)."""
+    one bit-identical pipeline. Weak Hamming<=8 edges over near-uniform
+    synthetic vectors chain into a high-diameter pair graph (27 rounds
+    of plain min-label propagation at sf0.01, past its max_iter of 25);
+    connected_components' hook and jump steps converge on it in 4."""
     emb = _t(spark, sf_dir, "embeddings")
     pairs = SIM.srp_near_dup_pairs(
         emb, "vec_id", "embedding", dim=64, num_planes=32,
         band_bits=8, max_hamming=8,
     )
-    kept = CC.drop_near_dups(emb, pairs, "vec_id", cc_variant="star")
+    kept = CC.drop_near_dups(emb, pairs, "vec_id")
     return kept.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_kept"),
         F.min("vec_id").alias("min_kept_id"),
@@ -10346,8 +10343,7 @@ FROM nourl
 """,
         "dedup_cluster_docs": _SQL_CC_PREFIX
         + "SELECT node AS doc_id, comp FROM comp",
-        # star contraction reaches the same fixpoint as propagation:
-        # comp = component min id — one oracle, two implementations
+        # same operator and pair graph as dedup_cluster_docs: one oracle
         "cc_star_docs": _SQL_CC_PREFIX
         + "SELECT node AS doc_id, comp FROM comp",
         "dedup_survivor_corpus": _SQL_CC_PREFIX

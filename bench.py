@@ -81,7 +81,7 @@ BENCH_QUERIES = [
     #   real StateStore dedup; the other streaming shapes share its
     #   source/trigger machinery and stay on the correctness gate)
     # new shapes in round 5:
-    "cc_star_docs",              # alternating-star CC (O(log n) fallback)
+    "cc_star_docs",              # connected components, hook+jump rounds
     "srp_near_dup_embed",        # exact-int SRP signatures + band join
     # lsh_near_dup_recall stays out: it deliberately runs the exact
     # O(n^2) verify next to the LSH path (a correctness gate, not a

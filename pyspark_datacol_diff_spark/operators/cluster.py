@@ -10,23 +10,24 @@ extension. Every pair-producing dedup operator in this engine
 edges of a similarity graph; an actual dedup must then KEEP ONE document
 per connected component. This module is that final step.
 
-Algorithm: iterative min-label propagation. Every node starts labeled
-with itself; each round, each node takes the min label over itself and
-its neighbors; fixpoint = every node labeled with the min node id of its
-component. Convergence needs O(diameter) rounds — near-duplicate graphs
-are dense clusters of mutually-similar documents, so the diameter is
-small (2-4) and the loop runs a handful of rounds. For adversarially
-long path graphs, the alternating large-star/small-star algorithm
-(Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
-2014) converges in O(log n) rounds; propagation is the right default
-for the dedup workload and keeps every round to two shuffles.
+Algorithm: min-label propagation with hooking and pointer jumping
+(Hash-to-Min style; Rastogi et al., "Finding Connected Components in
+Map-Reduce in Logarithmic Rounds", ICDE 2013). Every node's label is a
+node id of its own component and only ever decreases; the fixpoint
+labels every node with the min node id of its component. Each round
+propagates labels over edges, hooks each node's new minimum onto the
+node its old label names, and jumps each label one step up its label
+tree. Propagation alone needs one round per hop of graph diameter;
+with the hook and the jump, chains converge in a logarithmic number of
+rounds while dense near-duplicate clusters still converge in one. One
+operator covers both the dense clusters of the dedup workload and
+chain-like pair graphs (weak-threshold LSH candidates).
 
 Scale notes (100 TB):
 
-- each round is one join (edges x labels, shuffled on node id) plus one
-  min-aggregate — both AQE-planned; a hot component (one label seen by
-  millions of edges) is a skewed join key and AQE's skew-join split
-  handles it;
+- each round is node-keyed joins and aggregates over id-only frames —
+  all AQE-planned; a hot component (one label seen by millions of
+  edges) is a skewed join key and AQE's skew-join split handles it;
 - the label frame is one row per node (ids only, bytes per row), NOT
   per document — the document payload is joined back exactly once at
   the end (``drop_near_dups``);
@@ -42,16 +43,15 @@ Scale notes (100 TB):
   DataFrame-level handle, so a long session (or a multi-query
   harness) otherwise accumulates every round of every run — exactly
   the storage leak the round-4 10x smoke measured (33 s co-run vs
-  14.5 s isolated for the same plan). Each round therefore frees the
-  previous round's checkpoint RDD through its JVM handle
+  14.5 s isolated for the same plan). Each round therefore frees its
+  retired checkpoint RDDs through their JVM handles
   (:func:`_free_ckpt`) the moment the new round is materialized, and
-  the edge frame is freed on convergence — peak executor storage is
-  2 label frames + 1 edge frame regardless of round count;
-- the per-round convergence probe is a single tiny aggregate — a
-  hash-sum digest of the labeling that changes (w.h.p.) whenever any
-  label moves — so one scalar comparison detects the fixpoint with no
-  expensive frame-vs-frame anti-join, for any orderable id type
-  (string ids included).
+  the edge frame is freed on return, so peak executor storage does not
+  grow with the round count;
+- the per-round convergence probe is a count of changed labels,
+  computed by the same action that materializes the round, so the
+  fixpoint is detected with no frame-vs-frame anti-join and no extra
+  action, for any orderable id type (string ids included).
 """
 
 from __future__ import annotations
@@ -123,47 +123,62 @@ def connected_components(
     node that appears in at least one edge (singletons, by definition,
     never appear in a pair list and are trivially their own component).
 
-    Job economy (round-4 re-profile, tightened in round 12): exactly
-    ONE Spark job per propagation round and NO init job. Each round's
-    aggregate carries the node's PREVIOUS label alongside the new one —
-    the self-loop row (s == d) in every node's group holds exactly
-    label(d) — so the convergence witness is a deterministic
-    count-of-changed-labels computed in the round's own job (the same
-    collect that materializes the round's ``localCheckpoint``), and
-    the separate init-digest job the cross-round hash-compare needed
-    (one extra job per call, plus a full hash pass over the label
-    frame) is gone. That exact witness covers non-NULL node ids only:
-    a NULL id's group is still watched through a cross-round
-    ``xxhash64`` of its label, so on graphs with a NULL node a 2^-64
-    hash collision on a changed label could end the loop one round
-    early. The identity-label round is fused into
-    initialization: labels start at each node's neighborhood min (what
-    round 1 used to compute from identity labels), saving one full
-    join + aggregate + materialization round.
+    Labels start at each node's neighborhood min (the identity-label
+    round fused into initialization). Each round then runs three
+    node-keyed steps — propagate, hook, jump (Hash-to-Min style;
+    Rastogi et al., ICDE 2013):
 
-    Storage economy (the round-5 fix): the previous round's checkpoint
-    blocks are released (:func:`_free_ckpt`) the moment the new round
-    is materialized, and the edge blocks on convergence — peak
-    executor storage is 2 label frames + 1 edge frame, independent of
+    - propagate: ``q(v) = min(label(u) for u in N(v) ∪ {v})`` — one
+      join of the edge frame against the labels and one aggregate;
+    - hook: each node also sends ``q(v)`` to the node its old label
+      names, so ``c(n) = min(q(n), q(v) for v with label(v) = n)`` —
+      one aggregate over an explode of the propagate output;
+    - jump: ``label(n) = min(c(n), c(c(n)))`` — one self-join of the
+      hook frame.
+
+    Labels only decrease and always name a node of the same component,
+    so a round in which no label changes is a fixpoint of propagation,
+    and the labels are the component minima. Propagation alone needs
+    one round per hop of graph diameter. The jump alone barely helps on
+    chains: it shortcuts paths inside each label tree but never merges
+    two trees. The hook merges them. Round counts, propagation vs
+    this body: a 120-node path 119 vs 7, a 300-node path with permuted
+    ids 271 vs 7, the 4-node path 3 vs 2. A dense cluster still takes
+    ONE round, which here pays one join and one checkpoint more than
+    propagation alone.
+
+    Convergence witness: the self-loop row (s == d) in node d's
+    propagate group carries d's previous label, so the round's own
+    action (the collect that materializes its ``localCheckpoint``)
+    counts the non-NULL nodes whose label moved — exact, type-agnostic,
+    no cross-round hash compare. A NULL node id never equi-joins: it is
+    labeled with the min of its neighbors' labels, its own old label is
+    NULL so it hooks only to itself, and it feeds no other node. Once
+    no non-NULL label moves, its label was computed from final labels.
+    With AQE on, every shuffle stage is submitted as its own Spark job,
+    so the job count per round is not fixed; the round count is the
+    scale contract.
+
+    Storage: the previous round's label blocks and the round's hook
+    blocks are released (:func:`_free_ckpt`) the moment the new round is
+    materialized, and the edge blocks on return — peak executor storage
+    is 2 label frames + 1 hook frame + 1 edge frame, independent of
     round count. The RETURNED frame's blocks stay live (a local
-    checkpoint cannot be recomputed); they are one (node, comp) id
-    pair per node — release via ``_free_ckpt`` after the last read if
-    the session is long-lived.
+    checkpoint cannot be recomputed); they are one (node, comp) id pair
+    per node — release via ``_free_ckpt`` after the last read if the
+    session is long-lived.
 
     Pass ``stats={}`` to receive ``stats["rounds"]`` — the number of
-    propagation JOINs executed (pinned by tests/test_cluster.py; at
-    100 TB each round is a cluster-wide shuffle, so the count is a
-    first-class performance contract).
+    rounds executed (pinned by tests/test_cluster.py; at 100 TB each
+    round is a few cluster-wide shuffles, so the count is a first-class
+    performance contract).
 
     Raises ``RuntimeError`` if the fixpoint isn't reached in
-    ``max_iter`` rounds (diameter > max_iter — see module docstring for
-    the large-star/small-star alternative).
+    ``max_iter`` rounds.
     """
     # doubled edge set WITH self-loops: N+(v) = N(v) ∪ {v}. The
-    # self-loops make each round a single join→groupBy that reads the
-    # label frame exactly once — new_label(v) = min over u∈N+(v) of
-    # label(u) — instead of the labels.union(prop) formulation's two
-    # scans of the label leaf per round.
+    # self-loops make propagation a single join→groupBy that reads the
+    # label frame exactly once and carries each node's previous label.
     pe = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e = (
         pe.select(
@@ -180,31 +195,17 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # init = one propagation step from identity labels: every node's
-    # label is min(self, direct neighbors) — the self-loop supplies
-    # "self". Every node appears as `s` in e, so the node set is
-    # preserved.
+    # init = one propagation step from identity labels. Every node
+    # appears as `s` in e, so the node set is preserved.
     # NOT checkpointed: the init frame is consumed exactly once (round
-    # 1's join inlines it), so a checkpoint would only persist blocks
-    # that are retired the moment round 1 materializes. The `e`
-    # checkpoint above is what truncates the expensive upstream.
+    # 1's join inlines it). The `e` checkpoint above is what truncates
+    # the expensive upstream.
     labels = (
         e.groupBy("s")
         .agg(F.min("d").alias("comp"))
         .select(F.col("s").alias("node"), "comp")
     )
     try:
-        # Convergence witness, computed INSIDE each round's job: the
-        # self-loop row (s == d) in node d's group carries d's previous
-        # label, so `comp != __old` is an exact per-node changed flag —
-        # for non-NULL ids deterministic (no hash-collision caveat),
-        # type-agnostic, and free of the init-digest job the
-        # cross-round hash-compare needed. A NULL node id never matches the equi-join (its
-        # self-loop row is dropped, so its __old is NULL every round);
-        # such a group is excluded from the changed count and watched
-        # through a hash of its label instead, compared across rounds —
-        # one extra confirming round for NULL-id graphs only, identical
-        # round counts everywhere else.
         changed_cnt = F.count(
             F.when(
                 F.col("node").isNotNull()
@@ -212,38 +213,60 @@ def connected_components(
                 True,
             )
         )
-        null_grp_dig = F.max(
-            F.when(F.col("node").isNull(), F.xxhash64("comp"))
-        )
-        prev_null_dig = object()  # sentinel: no prior round observed
-
         for rounds in range(1, max_iter + 1):
-            new_labels = (
+            prop = (
                 e.join(labels, e["s"] == labels["node"])
                 .groupBy(e["d"])
                 .agg(
-                    F.min("comp").alias("comp"),
+                    F.min("comp").alias("q"),
                     F.min(
                         F.when(e["s"] == e["d"], F.col("comp"))
-                    ).alias("__old"),
+                    ).alias("old"),
                 )
-                .select(F.col("d").alias("node"), "comp", "__old")
+            )
+            # checkpointed because the jump reads it twice
+            hook = (
+                prop.select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col("d").alias("n"), "q", "old"),
+                            F.struct(
+                                F.col("old").alias("n"),
+                                "q",
+                                F.lit(None).alias("old"),
+                            ),
+                        )
+                    ).alias("x")
+                )
+                .groupBy("x.n")
+                .agg(F.min("x.q").alias("c"), F.min("x.old").alias("old"))
                 .localCheckpoint(eager=False)
             )
-            # this collect materializes the round's checkpoint (and, in
-            # round 1, `e` and the init labels) — still one job/round
-            row = new_labels.agg(changed_cnt, null_grp_dig).collect()[0]
+            parent = hook.select(
+                F.col("n").alias("__p"), F.col("c").alias("__pc")
+            )
+            new_labels = (
+                hook.join(parent, F.col("c") == F.col("__p"), "left")
+                .select(
+                    F.col("n").alias("node"),
+                    F.least("c", "__pc").alias("comp"),
+                    F.col("old").alias("__old"),
+                )
+                .localCheckpoint(eager=False)
+            )
+            # this collect materializes the round's checkpoints (and, in
+            # round 1, `e` and the init labels)
+            n_changed = new_labels.agg(changed_cnt).collect()[0][0]
             _free_ckpt(labels)  # retired round: never read again
+            _free_ckpt(hook)
             labels = new_labels
-            if row[0] == 0 and (row[1] is None or row[1] == prev_null_dig):
+            if n_changed == 0:
                 if stats is not None:
                     stats["rounds"] = rounds
                 return labels.select("node", "comp")
-            prev_null_dig = row[1]
         _free_ckpt(labels)
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(graph diameter exceeds max_iter)"
+            f"connected_components did not converge in {max_iter} rounds"
         )
     finally:
         _free_ckpt(e)
@@ -260,235 +283,14 @@ def _canonical(e: DataFrame) -> DataFrame:
     )
 
 
-def _star_round(e: DataFrame, *, large: bool, dedup: bool = True) -> DataFrame:
-    """One large-star or small-star rewrite (Kiveris et al., SoCC'14).
-
-    ``dedup=False`` skips the output canonical ``distinct`` — correct
-    when the consumer is the NEXT star round: its neighborhood-min
-    window is duplicate-insensitive, so only the final round of an
-    iteration needs the dedup to bound edge-set growth. Fusing the two
-    rounds this way removes one full shuffle per iteration (measured on
-    the 260-edge near-dup graph where per-round fixed cost dominates).
-
-    Gather each node's neighborhood over both edge directions, compute
-    ``m = min(neighborhood + self)``, then reconnect:
-
-    - large-star: every STRICTLY LARGER neighbor v > u attaches to m
-      (keeps every (v>u, m) edge — shrinks long tails toward minima);
-    - small-star: every v <= u neighbor (and u itself) attaches to m —
-      collapses local stars onto their centers.
-
-    Both preserve connectivity; alternating them converges to stars
-    centered at each component's min in O(log n) rounds.
-
-    Plan shape: the input edge frame is referenced exactly ONCE —
-    direction-doubling is an explode, the neighborhood min is a window
-    aggregate (one shuffle, no self-join), and the small-star's dual
-    emission is a second explode — so the logical plan across the
-    iteration loop grows linearly with round count instead of
-    multiplying per round (the union/join formulation referenced its
-    inputs twice per round: exponential tree growth, planner OOM on
-    high-diameter graphs once lineage is no longer checkpoint-
-    truncated).
-    """
-    from pyspark.sql.window import Window
-
-    nbrs = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s"), F.col("d")),
-                F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-            )
-        ).alias("x")
-    ).select("x.s", "x.d")
-    j = nbrs.withColumn(
-        "m",
-        F.least(F.min("d").over(Window.partitionBy("s")), F.col("s")),
-    )
-    if large:
-        out = j.filter(F.col("d") > F.col("s")).select(
-            F.col("d").alias("s"), F.col("m").alias("d")
-        )
-    else:
-        # per row: always (s, m); additionally (d, m) when d <= s —
-        # array_compact drops the null arm, one explode, input
-        # referenced once
-        emit = F.array_compact(
-            F.array(
-                F.struct(F.col("s").alias("p"), F.col("m").alias("q")),
-                F.when(
-                    F.col("d") <= F.col("s"),
-                    F.struct(F.col("d").alias("p"), F.col("m").alias("q")),
-                ),
-            )
-        )
-        out = (
-            j.select(F.explode(emit).alias("x"))
-            .select(F.col("x.p").alias("s"), F.col("x.q").alias("d"))
-        )
-    if not dedup:
-        # intermediate round: duplicates and self-loops are harmless to
-        # the next round's min window (self is already in `least`), and
-        # orientation is erased by its direction-doubling explode
-        return out
-    return _canonical(out)
-
-
-def _is_min_star_forest(e: DataFrame) -> bool:
-    """Convergence witness for the star alternation, decidable on a
-    SINGLE round's output (the digest-compare it replaces needed one
-    extra full iteration just to observe "nothing changed"): a
-    canonical edge set (s < d, distinct, loop-free) is a fixpoint of
-    large/small alternation iff it is a star forest — no satellite
-    attaches to two centers and no node is both center and satellite.
-    Both violations are visible node-locally, so ONE node-keyed
-    aggregate over the edge endpoints decides it; `limit(1)` stops the
-    scan at the first counterexample. (A non-forest set is never
-    stable: e.g. (a,x),(b,x) re-wires x's star to (b,a) next round —
-    exactly the witness's multi-center case.)"""
-    stat = e.select(
-        F.col("s").alias("node"),
-        F.lit(1).alias("ns"),
-        F.lit(0).alias("nd"),
-    ).unionAll(
-        e.select(
-            F.col("d").alias("node"),
-            F.lit(0).alias("ns"),
-            F.lit(1).alias("nd"),
-        )
-    )
-    bad = (
-        stat.groupBy("node")
-        .agg(F.sum("ns").alias("ns"), F.sum("nd").alias("nd"))
-        .filter(
-            (F.col("nd") > 1) | ((F.col("ns") > 0) & (F.col("nd") > 0))
-        )
-    )
-    return len(bad.limit(1).collect()) == 0
-
-
-def _edge_digest(e: DataFrame) -> tuple[int, int]:
-    """(count, hash-sum) of a canonical edge set — one tiny aggregate
-    as the convergence witness (collision-improbable). The hash sum
-    accumulates in decimal: signed xxhash64 values summed as longs can
-    overflow (ANSI mode raises)."""
-    row = e.agg(
-        F.count(F.lit(1)),
-        F.coalesce(
-            F.sum(F.xxhash64("s", "d").cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ),
-    ).collect()[0]
-    return int(row[0]), int(row[1])
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    *,
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — O(log n) rounds regardless of graph diameter, where
-    :func:`connected_components`' label propagation needs O(diameter)
-    rounds. Use this for path-/mesh-like graphs; propagation remains
-    the cheaper default for the near-dup workload (dense low-diameter
-    clusters, 2 shuffles per round vs the star rounds' 3).
-
-    Same output contract as :func:`connected_components`:
-    ``(node, comp)`` for every node appearing in an edge. The result
-    plan reads the converged star edge set and the INITIAL canonical
-    edge set (both checkpointed and edge-list-sized; the node set is
-    derived from the latter inside the caller's action — round 12, one
-    job and one checkpoint fewer per call); their blocks stay live
-    after the caller's action — ``_free_ckpt`` them in long-lived
-    sessions (the bench/smoke harnesses do, via ``quiesce_session``).
-    """
-    # localCheckpoint per round (lineage truncation — see the module
-    # docstring for why persist chaining recomputes the whole chain),
-    # with the retired round's blocks freed as soon as the new round
-    # is materialized by its _edge_digest (still ONE job per round).
-    e0 = _canonical(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    ).localCheckpoint(eager=False)
-    # the full node set: star rounds contract edges, and an already-
-    # settled satellite can drop out of the edge list entirely. Derived
-    # LAZILY from the initial checkpointed edge set and computed inside
-    # the caller's final action (round 12 — it previously ran as its
-    # own eager count job plus a checkpoint of its own); the initial
-    # `e0` blocks therefore stay live through the loop (edge-list-
-    # sized, one extra frame of peak storage) instead of being freed
-    # after round 1.
-    nodes = (
-        e0.select(F.col("s").alias("node"))
-        .union(e0.select(F.col("d").alias("node")))
-        .distinct()
-    )
-    # the witness job doubles as the checkpoint materializer (the role
-    # _edge_digest used to play); an already-star-forest input skips
-    # the loop entirely, and each round stops the moment ITS OWN output
-    # is a forest — one fewer full iteration than digest-compare, which
-    # is a whole round of shuffles on the near-dup graphs (measured:
-    # their edge set settles in round 1 and digest-compare paid round 2
-    # purely to see it).
-    e = e0
-    done = _is_min_star_forest(e)
-    if not done:
-        for _ in range(max_iter):
-            new_e = _star_round(
-                _star_round(e, large=True, dedup=False), large=False
-            ).localCheckpoint(eager=False)
-            done = _is_min_star_forest(new_e)
-            if e is not e0:  # e0 feeds the node set until the caller acts
-                _free_ckpt(e)
-            e = new_e
-            if done:
-                break
-        else:
-            if e is not e0:
-                _free_ckpt(e)
-            _free_ckpt(e0)
-            raise RuntimeError(
-                f"star rounds did not converge in {max_iter} iterations"
-            )
-    # converged edge set is a union of stars (min, member): every
-    # non-center node has exactly one neighbor, its component min
-    membership = e.select(
-        F.col("d").alias("node"), F.col("s").alias("comp")
-    ).union(e.select(F.col("s").alias("node"), F.col("s").alias("comp")))
-    return (
-        nodes.join(membership, "node", "left")
-        .groupBy("node")
-        .agg(F.coalesce(F.min("comp"), F.first("node")).alias("comp"))
-    )
-
-
-def _components(pairs: DataFrame, src: str, dst: str, variant: str) -> DataFrame:
-    """Dispatch between the two CC algorithms: ``propagation`` (the
-    dedup default — O(diameter) rounds, 2 shuffles each, right for
-    dense low-diameter near-dup clusters) and ``star`` (O(log n)
-    rounds regardless of diameter — right for chain-like pair graphs,
-    e.g. weak-threshold LSH candidates whose transitive chains exceed
-    propagation's max_iter)."""
-    if variant == "star":
-        return connected_components_star(pairs, src, dst)
-    if variant == "propagation":
-        return connected_components(pairs, src, dst)
-    raise ValueError(f"cc_variant must be propagation|star, got {variant!r}")
-
-
 def near_dup_victims(
     pairs: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    *,
-    cc_variant: str = "propagation",
 ) -> DataFrame:
     """Ids to DROP from a corpus given near-dup pairs: every member of a
     connected component except its min-id survivor. Returns ``(node)``."""
-    comps = _components(pairs, src, dst, cc_variant)
+    comps = connected_components(pairs, src, dst)
     return comps.filter(F.col("node") != F.col("comp")).select("node")
 
 
@@ -500,7 +302,6 @@ def drop_near_dups(
     src: str = "id_a",
     dst: str = "id_b",
     priority_col: str | None = None,
-    cc_variant: str = "propagation",
 ) -> DataFrame:
     """Deduplicated corpus: keep every row except non-survivor members
     of near-dup components. Default survivor = min id per component
@@ -520,9 +321,9 @@ def drop_near_dups(
     ``max_by`` aggregate per component.
     """
     if priority_col is None:
-        victims = near_dup_victims(pairs, src, dst, cc_variant=cc_variant)
+        victims = near_dup_victims(pairs, src, dst)
     else:
-        comps = _components(pairs, src, dst, cc_variant)
+        comps = connected_components(pairs, src, dst)
         pri = df.select(
             F.col(id_col).alias("node"), F.col(priority_col).alias("__p")
         )
@@ -553,7 +354,7 @@ def drop_near_dups(
 
 
 def _pagerank_frames(
-    edges: DataFrame, src_col: str, dst_col: str, deg_via_window: bool,
+    edges: DataFrame, src_col: str, dst_col: str,
     weight_col: str | None = None, symmetric: bool = False,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared PageRank setup: persisted ``(e, nodes, ew)`` frames.
@@ -567,23 +368,13 @@ def _pagerank_frames(
     iteration (executor loss, skew OOM) doesn't leave blocks pinned
     for the session's lifetime.
 
-    Degree attachment, two physical strategies. The round-7 src
-    repartition (below) changed which one wins: with ``e`` already
-    hash-partitioned on src, both paths read co-located input, and the
-    aggregate+join formulation is the NEW DEFAULT.
-
-    - ``deg_via_window=False`` (default): map-side-combined
-      ``groupBy(src).count()`` joined back — both sides read the
-      src-partitioned persisted ``e`` with no further exchange, and
-      every stage over the big side stays AQE-splittable (a mega-hub
-      never has to fit one window task). Measured 4.6 -> 2.9 s on the
-      sf0.1 co-purchase graph (iters=3) vs the window path once the
-      src repartition landed.
-    - ``deg_via_window=True``: ``count() over partitionBy(src)`` —
-      the round-6 winner when the window's exchange doubled as the
-      only src partitioning; kept for graphs where the single extra
-      join materially hurts, with the documented trade that a
-      mega-hub's out-edges must co-locate in one window task.
+    Degree attachment is a map-side-combined ``groupBy(src).count()``
+    joined back: both sides read the src-partitioned persisted ``e``
+    with no further exchange, and every stage over the big side stays
+    AQE-splittable (a mega-hub never has to fit one window task).
+    Measured 4.6 -> 2.9 s on the sf0.1 co-purchase graph (iters=3)
+    against a ``count() over partitionBy(src)`` window once the src
+    repartition landed.
     """
     cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
     if weight_col is not None:
@@ -615,9 +406,10 @@ def _pagerank_frames(
             )
             .alias("w")
         )
-    # hash-repartition by src BEFORE persisting: (a) the degree window
-    # and every round's ranks-x-edges join need src partitioning — this
-    # shuffle is the one they would each have paid anyway, paid once;
+    # hash-repartition by src BEFORE persisting: (a) the degree
+    # aggregate and every round's ranks-x-edges join need src
+    # partitioning — this shuffle is the one they would each have
+    # paid anyway, paid once;
     # (b) upstream unions/explodes CONCATENATE partition lists (a
     # doubled co-purchase edge list arrived as 128 partitions of a
     # 7k-edge graph), and persist/localCheckpoint pin that count for
@@ -641,13 +433,8 @@ def _pagerank_frames(
             .distinct()
             .persist()
         )
-    if deg_via_window:
-        ew = e.withColumn(
-            "deg", agg.over(Window.partitionBy("src"))
-        ).persist()
-    else:
-        out_deg = e.groupBy("src").agg(agg.alias("deg"))
-        ew = e.join(out_deg, "src").persist()
+    out_deg = e.groupBy("src").agg(agg.alias("deg"))
+    ew = e.join(out_deg, "src").persist()
     return e, nodes, ew
 
 
@@ -659,7 +446,6 @@ def pagerank(
     iterations: int = 10,
     damping: float = 0.85,
     checkpoint_interval: int = 1,
-    deg_via_window: bool = False,
     symmetric: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list — the
@@ -691,10 +477,8 @@ def pagerank(
     checkpoint is a full job, so for SHORT fixed iteration counts a
     larger interval collapses the loop into one job over a few chained
     shuffles — measured 6.1 -> 4.7 s for 3 rounds on the sf0.1
-    co-purchase graph with interval >= iterations (and 4.7 -> 4.0 s
-    with the default windowed degree attachment — see
-    :func:`_pagerank_frames` for that trade); the default interval of
-    1 stays right for long runs, where unbounded lineage is the
+    co-purchase graph with interval >= iterations; the default interval
+    of 1 stays right for long runs, where unbounded lineage is the
     bigger enemy.
 
     Returns ``(node, rank)`` — one row per node appearing anywhere in
@@ -707,7 +491,7 @@ def pagerank(
             f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
         )
     e, nodes, ew = _pagerank_frames(
-        edges, src_col, dst_col, deg_via_window, symmetric=symmetric
+        edges, src_col, dst_col, symmetric=symmetric
     )
     try:
         ranks = nodes.withColumn("rank", F.lit(1.0))
@@ -749,7 +533,6 @@ def pagerank_exact(
     damping_den: int = 100,
     scale: int = 1_000_000,
     checkpoint_interval: int = 1,
-    deg_via_window: bool = False,
     seed_pred=None,
     weight_col: str | None = None,
     symmetric: bool = False,
@@ -824,8 +607,7 @@ def pagerank_exact(
         )
     reset = (scale * (damping_den - damping_num)) // damping_den
     e, nodes, ew = _pagerank_frames(
-        edges, src_col, dst_col, deg_via_window, weight_col,
-        symmetric=symmetric,
+        edges, src_col, dst_col, weight_col, symmetric=symmetric
     )
     contrib_expr = (
         "(rank * w) div deg" if weight_col is not None else "rank div deg"

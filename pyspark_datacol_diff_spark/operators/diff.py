@@ -31,7 +31,7 @@ Semantic parity notes (SURVEY.md §4.4), all preserved by default:
   (reference :124 and the when-order of :132 — a row whose OWN key is
   null gets 'S1_ONLY' because the s2-null test runs first; preserved);
 - duplicate primary keys fan out through the join (reference does the
-  same); ``assert_unique_keys=True`` adds an optional guard;
+  same);
 - non-string columns compare natively (typed), not via string casts —
   values are stringified only in the output structs (reference :109-110).
 
@@ -580,9 +580,16 @@ def apply_diff(
 
     Semantics per flag: ``S2_ONLY`` rows materialize from the diff's
     s2-side values; ``S1_ONLY`` rows are deleted; ``''`` (changed) rows
-    take each column's ``s2_value`` from ``CompColArr`` (falling back to
-    the s1 value for columns that didn't differ); ``NODIFF`` rows pass
-    through.
+    take each column's ``s2_value`` from ``CompColArr`` whenever the
+    column has an entry there, a NULL ``s2_value`` included (a value
+    changed to NULL replays as NULL), and keep the s1 value for columns
+    that didn't differ; ``NODIFF`` rows pass through.
+
+    The round trip is exact only for unique primary keys. Duplicate
+    keys fan out: every diff row for a key joins every s1 row with that
+    key, so 2 s1 rows and 1 s2 row on one key give 4 changeset rows.
+    With ``null_equals_blank=True`` (the diff's default) NULL and ''
+    compare equal, so the round trip is exact only modulo that.
 
     Values in ``CompColArr`` are stringified (diff output contract), so
     the reconstruction is string-typed — exact for all-string frames
@@ -630,10 +637,12 @@ def apply_diff(
             for k in pk
         ],
         *[
-            F.coalesce(
+            F.when(
+                F.map_contains_key(F.col("__patch"), F.lit(c)),
                 F.element_at(F.col("__patch"), F.lit(c)),
-                F.col("__base_" + c).cast("string"),
-            ).alias(c)
+            )
+            .otherwise(F.col("__base_" + c).cast("string"))
+            .alias(c)
             for c in compare_cols
         ],
     )

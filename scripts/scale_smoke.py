@@ -59,19 +59,19 @@ QUERIES = [
     "digest_tree_orders",
     "bloom_semi_join_lineitem",
     "hard_negatives_embed",
-    # round-5 additions: the star-contraction CC fallback (same pair
-    # graph as dedup_cluster_docs — the O(log n) high-diameter path
-    # was previously never scale-measured), and the two stateful
-    # streaming shapes (watermark-bounded state is a design claim the
-    # smoke now measures: state rows at 1x vs 10x are recorded and
-    # must grow ~linearly with keys)
+    # round-5 additions: cc_star_docs (connected components over the
+    # same pair graph as dedup_cluster_docs; the name is kept from the
+    # deleted star variant), and the two stateful streaming shapes
+    # (watermark-bounded state is a design claim the smoke now
+    # measures: state rows at 1x vs 10x are recorded and must grow
+    # ~linearly with keys)
     "cc_star_docs",
     "streaming_dedup_events",
     "streaming_hist_rollup",
     # portable exact-int SRP LSH over embeddings (Arrow int64 matmul +
     # band-key join — the embedding-dedup scale path), and the full
-    # composition (SRP pairs -> star CC -> survivors -> census): the
-    # star contraction over a high-diameter LSH chain graph at volume
+    # composition (SRP pairs -> CC -> survivors -> census): connected
+    # components over a high-diameter LSH chain graph at volume
     "srp_near_dup_embed",
     "srp_dedup_embed",
     # iterative integer PageRank over the co-purchase graph (3 rounds,

@@ -4,6 +4,8 @@ cross-check, and the end-to-end near-dup survivor drop."""
 import random
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pyspark_datacol_diff_spark.operators.cluster import (
@@ -91,45 +93,73 @@ def test_drop_near_dups_keeps_min_survivor(spark):
     assert victims == [3, 5]
 
 
-def test_star_matches_propagation_on_random_graph(spark):
-    from pyspark_datacol_diff_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    rng = random.Random(99)
-    edges = list({tuple(sorted(rng.sample(range(80), 2))) for _ in range(90)})
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    assert _comps(connected_components_star(df)) == _comps(
-        connected_components(df)
-    )
-
-
-def test_star_handles_high_diameter_paths(spark):
-    from pyspark_datacol_diff_spark.operators.cluster import (
-        connected_components_star,
-    )
-
-    # a 120-node path: diameter 119 — propagation would need 119 rounds
-    # (fails its max_iter=25 default); star converges in O(log n)
+def test_cc_handles_high_diameter_paths(spark):
+    # a 120-node path: diameter 119 — plain propagation would need 119
+    # rounds; the hook and jump steps converge in 7
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(119)], ["id_a", "id_b"]
     )
-    got = _comps(connected_components_star(edges))
+    stats = {}
+    got = _comps(connected_components(edges, stats=stats))
     assert got == {i: 0 for i in range(120)}
-    with pytest.raises(RuntimeError):
-        connected_components(edges)  # default max_iter can't reach 119
+    assert stats["rounds"] == 7
 
 
-def test_star_two_node_and_triangle(spark):
-    from pyspark_datacol_diff_spark.operators.cluster import (
-        connected_components_star,
-    )
-
+def test_cc_two_node_and_triangle(spark):
     edges = spark.createDataFrame(
         [(5, 9), (1, 2), (2, 3), (1, 3)], ["id_a", "id_b"]
     )
-    got = _comps(connected_components_star(edges))
+    got = _comps(connected_components(edges))
     assert got == {5: 5, 9: 5, 1: 1, 2: 1, 3: 1}
+
+
+def test_cc_null_ids(spark):
+    """A NULL id never equi-joins, so it links no components: it takes
+    the min of its neighbors' labels and feeds no other node."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None), (None, 5), (5, 6), (7, 8), (None, None)],
+        "id_a long, id_b long",
+    )
+    got = _comps(connected_components(edges))
+    assert got == {1: 1, 2: 1, 5: 5, 6: 5, 7: 7, 8: 7, None: 1}
+
+
+def _permuted_path(n, seed):
+    ids = list(range(n))
+    random.Random(seed).shuffle(ids)
+    return list(zip(ids, ids[1:]))
+
+
+@st.composite
+def _graphs(draw):
+    """Random edges over a small id space, plus (sometimes) a path
+    through 40-300 permuted ids that shares ids with them."""
+    n = draw(st.integers(min_value=2, max_value=60))
+    node = st.integers(min_value=0, max_value=n - 1)
+    edges = draw(st.lists(st.tuples(node, node), min_size=1, max_size=80))
+    path_len = draw(st.sampled_from([0, 0, 40, 150, 300]))
+    ids = draw(st.permutations(range(path_len)))
+    return edges + list(zip(ids, ids[1:]))
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.too_slow,
+        HealthCheck.data_too_large,
+    ],
+)
+@given(edges=_graphs())
+# long permuted-id paths: plain propagation exceeds max_iter=25 on these
+@example(edges=_permuted_path(300, seed=1))
+@example(edges=_permuted_path(40, seed=2) + [(7, 7), (50, 51)])
+@example(edges=[(i + 1, i) for i in range(150)])
+def test_cc_matches_union_find_property(spark, edges):
+    nodes = sorted({x for e in edges for x in e})
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    assert _comps(connected_components(df)) == _union_find(edges, nodes)
 
 
 def test_pagerank_hand_computed_chain(spark):
@@ -195,15 +225,16 @@ def test_round_count_pin_dense_cluster(spark):
 
 
 def test_round_count_on_path(spark):
-    # path 0-1-2-3: init labels (0,0,1,2); two improving rounds + one
-    # confirming round reach the fixpoint
+    # path 0-1-2-3: init labels (0,0,1,2); round 1 propagates (0,0,0,1)
+    # and hooks 2's new min onto node 1, so node 3's jump through 1
+    # reaches 0; round 2 confirms
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3)], ["id_a", "id_b"]
     )
     stats = {}
     got = _comps(connected_components(edges, stats=stats))
     assert got == {0: 0, 1: 0, 2: 0, 3: 0}
-    assert stats["rounds"] == 3
+    assert stats["rounds"] == 2
 
 
 def test_triangle_counts_hand_graphs(spark):
@@ -299,11 +330,10 @@ def test_cc_releases_round_state(spark):
 
 
 def test_cc_string_ids(spark):
-    """Round-5: string node ids work end to end in BOTH variants (the
-    convergence digest no longer casts labels to decimal)."""
+    """Round-5: string node ids work end to end (the convergence
+    witness never casts labels to decimal)."""
     from pyspark_datacol_diff_spark.operators.cluster import (
         connected_components,
-        connected_components_star,
     )
 
     edges = spark.createDataFrame(
@@ -311,28 +341,6 @@ def test_cc_string_ids(spark):
     )
     want = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     assert _comps(connected_components(edges)) == want
-    assert _comps(connected_components_star(edges)) == want
-
-
-def test_drop_near_dups_star_variant_matches_propagation(spark):
-    """cc_variant='star' must elect identical survivors on a graph both
-    algorithms handle; an unknown variant raises."""
-    import pytest
-
-    from pyspark_datacol_diff_spark.operators.cluster import drop_near_dups
-
-    docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(8)], "doc_id long, t string"
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (5, 6)], ["id_a", "id_b"]
-    )
-    prop = {r["doc_id"] for r in drop_near_dups(docs, pairs, "doc_id").collect()}
-    star = {r["doc_id"] for r in
-            drop_near_dups(docs, pairs, "doc_id", cc_variant="star").collect()}
-    assert prop == star == {0, 1, 4, 5, 7}
-    with pytest.raises(ValueError, match="cc_variant"):
-        drop_near_dups(docs, pairs, "doc_id", cc_variant="bogus")
 
 
 def test_pagerank_exact_hand_computed_chain(spark):
@@ -395,9 +403,8 @@ def test_pagerank_exact_validation(spark):
 
 
 def test_pagerank_exact_strategy_knobs_are_result_invariant(spark):
-    """Round-6 plan knobs (checkpoint_interval, deg_via_window) are
-    PHYSICAL-only: every combination returns the identical exact-integer
-    ranking."""
+    """The checkpoint_interval knob is PHYSICAL-only: every interval
+    returns the identical exact-integer ranking."""
     import random as _rnd
 
     from pyspark_datacol_diff_spark.operators.cluster import pagerank_exact
@@ -412,14 +419,14 @@ def test_pagerank_exact_strategy_knobs_are_result_invariant(spark):
         (x["node"], x["rank"])
         for x in pagerank_exact(e, iterations=3).collect()
     )
-    for ci, win in ((3, True), (2, False), (1, False), (4, True)):
+    for ci in (3, 2, 1, 4):
         got = sorted(
             (x["node"], x["rank"])
             for x in pagerank_exact(
-                e, iterations=3, checkpoint_interval=ci, deg_via_window=win
+                e, iterations=3, checkpoint_interval=ci
             ).collect()
         )
-        assert got == base, (ci, win)
+        assert got == base, ci
     with pytest.raises(ValueError, match="checkpoint_interval"):
         pagerank_exact(e, checkpoint_interval=0)
 

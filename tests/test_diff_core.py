@@ -162,7 +162,8 @@ def test_apply_diff_round_trip(spark, employee_pair):
 def _apply_diff_two_branch(s1, diff_df, pk, compare_cols):
     """Reference: the former two-branch ``apply_diff`` — s1 inner-joined
     to the matched diff rows, unioned with the ``S2_ONLY`` rows projected
-    out of the diff (which references the diff twice)."""
+    out of the diff (which references the diff twice). A column with a
+    patch entry takes its ``s2_value`` even when that is NULL."""
 
     def patch():
         return F.map_from_entries(
@@ -180,9 +181,12 @@ def _apply_diff_two_branch(s1, diff_df, pk, compare_cols):
     patched = s1.join(changed, list(pk), "inner").select(
         *[F.col(k).cast("string").alias(k) for k in pk],
         *[
-            F.coalesce(
-                F.element_at(F.col("__patch"), F.lit(c)), F.col(c).cast("string")
-            ).alias(c)
+            F.when(
+                F.map_contains_key(F.col("__patch"), F.lit(c)),
+                F.element_at(F.col("__patch"), F.lit(c)),
+            )
+            .otherwise(F.col(c).cast("string"))
+            .alias(c)
             for c in compare_cols
         ],
     )
@@ -249,12 +253,10 @@ def test_apply_diff_matches_two_branch_formulation(spark, case):
         assert all(r[0] is not None and r[1] is not None for r in rows)
     if case == "mixed":
         # duplicate s1 key: 2 diff rows x 2 s1 rows, each patched by its
-        # own diff row; a value changed to NULL falls back to the s1
-        # value (element_at cannot tell a NULL s2_value from a missing
-        # entry)
+        # own diff row; values changed to NULL replay as NULL
         assert rows[("2", "a", "30", "w")] == 3
         assert rows[("2", "a", "31", "w")] == 1
-        assert rows[("1", "b", "20", "y")] == 1
+        assert rows[("1", "b", None, None)] == 1
         assert sum(rows.values()) == 8
 
 
