@@ -263,11 +263,10 @@ def _q_diff_orders_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_diff_orders_col_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # sort=False: the driver compare is order-insensitive, so the
-    # facade's n_cols-row display sort would only add a total-order
-    # exchange (and a scale-lint warn) for nothing
+    # unsorted: the driver compare is order-insensitive; only the pandas
+    # facade (compute_dataframe_diff) sorts its n_cols-row summary
     s1, s2 = _orders_pair(spark, sf_dir)
-    return column_mismatch_counts(diff(s1, s2, ["o_orderkey"]), sort=False)
+    return column_mismatch_counts(diff(s1, s2, ["o_orderkey"]))
 
 
 def _q_diff_drilldown_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5276,32 +5275,23 @@ def _q_ann_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF top-k (k-means cells, zero-shuffle assignment) run with
+    """IVF top-k (hash-sampled cells, zero-shuffle assignment) run with
     nprobe == nlist: probing every cell makes the result equal the exact
-    brute-force top-k WHATEVER centroids k-means produced, so the whole
-    IVF machinery — sampled fit, per-row cell argmax, probe join, local
-    top-k merge — is verified against the exact-cosine SQL oracle.
+    brute-force top-k WHATEVER the centroids, so the whole IVF
+    machinery — sampled centroids, per-row cell argmax, probe join,
+    local top-k merge — is verified against the exact-cosine SQL oracle.
     Approximate recall at nprobe < nlist stays pytest-gated
     (tests/test_similarity.py)."""
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    return SIM.ivf_topk(
-        emb,
-        q,
-        5,
-        nlist=8,
-        nprobe=8,
-        # cheapest coarse quantizer: full probe is exact whatever the
-        # centroids, so skip the k-means fit entirely — nlist
-        # hash-sampled corpus vectors seed the cells (one TakeOrdered
-        # job), and nlist=8 halves the baked-literal assignment
-        # expression Janino has to compile (the dominant cost of this
-        # query at local scale was plan compilation, not execution —
-        # 4.8 s -> 2.9 s measured at sf0.1)
-        fit_method="sample",
-    ).select("qid", "neighbor_id", "rank")
+    # nlist=8 halves the baked-literal assignment expression Janino has
+    # to compile (the dominant cost of this query at local scale was
+    # plan compilation, not execution — 4.8 s -> 2.9 s measured at sf0.1)
+    return SIM.ivf_topk(emb, q, 5, nlist=8, nprobe=8).select(
+        "qid", "neighbor_id", "rank"
+    )
 
 
 def _q_ann_ivf_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5319,9 +5309,9 @@ def _q_ann_ivf_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    return SIM.ivf_topk(
-        emb, q, 5, nlist="auto", nprobe="all", fit_method="sample"
-    ).select("qid", "neighbor_id", "rank")
+    return SIM.ivf_topk(emb, q, 5, nlist="auto", nprobe="all").select(
+        "qid", "neighbor_id", "rank"
+    )
 
 
 def _q_ann_ivf_auto_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5343,9 +5333,9 @@ def _q_ann_ivf_auto_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
     exact = SIM.cosine_topk(emb, q, 10).select("qid", "neighbor_id")
-    ivf = SIM.ivf_topk(
-        emb, q, 10, nlist="auto", nprobe=8, fit_method="sample"
-    ).select("qid", "neighbor_id")
+    ivf = SIM.ivf_topk(emb, q, 10, nlist="auto", nprobe=8).select(
+        "qid", "neighbor_id"
+    )
     m = exact.withColumn("in_e", F.lit(1)).join(
         ivf.withColumn("in_i", F.lit(1)), ["qid", "neighbor_id"], "left"
     )
@@ -6005,9 +5995,7 @@ def _q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    cb = SIM.pq_codebooks(
-        emb, dim=64, m=8, k=16, fit_method="kmeans", fit_fraction=1.0
-    )
+    cb = SIM.pq_codebooks(emb, dim=64, m=8, k=16)
     pq = SIM.pq_topk_refined(emb, q, 10, cb, n_candidates=100).select(
         "qid", "neighbor_id"
     )
@@ -6364,17 +6352,14 @@ def _q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     at >= 2 co-orders and symmetrized. Three rank rounds in scaled
     integer arithmetic — integer sums are exact and associative, so
     the result is bit-for-bit stable across partitionings and replays
-    hash-exactly against the unrolled SQL oracle (the float variant's
-    nondeterministic low bits cannot be oracled). Two shuffles per
-    round; with only 3 fixed rounds the checkpoint interval covers the
-    whole loop (one job over 6 chained shuffles — lineage depth is
-    bounded by construction, so per-round eager materialization would
-    pay 2 extra jobs for nothing; the final round still checkpoints
-    and retires its blocks per the cluster-module contract)."""
+    hash-exactly against the unrolled SQL oracle (float sums'
+    nondeterministic low bits could not be oracled). Two shuffles per
+    round; pagerank_exact checkpoints after every 3rd round and after
+    the last, so the 3 rounds run as one job over 6 chained shuffles —
+    lineage depth is bounded by construction, and the one checkpoint
+    retires its blocks per the cluster-module contract."""
     edges = _copurchase_edges(spark, sf_dir)
-    r = CC.pagerank_exact(
-        edges, iterations=3, checkpoint_interval=3, symmetric=True
-    )
+    r = CC.pagerank_exact(edges, iterations=3, symmetric=True)
     return r.select(
         F.col("node").alias("part"), F.col("rank").alias("rank_scaled")
     )
@@ -6422,14 +6407,14 @@ def _q_ppr_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     so ranks measure proximity to the seed set — the seed-document
     expansion ordering of a training-data pipeline (grow a curated
     seed corpus along the similarity/link graph) rather than global
-    authority. Identical dataflow and checkpoint hygiene; the seed
-    predicate is engine-portable integer arithmetic, so the unrolled
-    SQL oracle replays every round hash-exactly."""
+    authority. Identical dataflow and checkpoint schedule (one job for
+    the 3 rounds); the seed predicate is engine-portable integer
+    arithmetic, so the unrolled SQL oracle replays every round
+    hash-exactly."""
     edges = _copurchase_edges(spark, sf_dir)
     r = CC.pagerank_exact(
         edges,
         iterations=3,
-        checkpoint_interval=3,
         seed_pred=lambda n: n % 20 == 0,
         symmetric=True,
     )
@@ -6528,14 +6513,13 @@ def _q_wpagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-purchase graph, weighted by co-order counts: each edge carries
     ``(rank * n_orders) div W_out`` so frequently-co-bought parts pull
     proportionally more authority than the uniform walk gives them.
-    Same dataflow, same per-round hygiene; the plan-side positive-
+    Same dataflow, same checkpoint schedule; the plan-side positive-
     weight guard and integer arithmetic keep the unrolled SQL oracle
     hash-exact."""
     edges = _copurchase_edges(spark, sf_dir, weighted=True)
     r = CC.pagerank_exact(
         edges,
         iterations=3,
-        checkpoint_interval=3,
         weight_col="n_orders",
         symmetric=True,
     )

@@ -7,7 +7,8 @@ multimodal columns).
 Public API:
 
     from pyspark_datacol_diff_spark import (
-        diff, diff_summary, compute_dataframe_diff, standardize, gen_comp_col,
+        diff, compute_dataframe_diff, diff_summary_stats, standardize,
+        gen_comp_col,
     )
 """
 
@@ -29,7 +30,6 @@ from .operators.diff import (
     compute_dataframe_diff,
     column_mismatch_counts,
     diff,
-    diff_summary,
     diff_summary_stats,
     flag_counts,
     gen_comp_col,
@@ -85,7 +85,6 @@ __all__ = [
     "digest_tree",
     "digest_tree_diff",
     "distribution_drift",
-    "diff_summary",
     "diff_summary_stats",
     "flag_counts",
     "gen_comp_col",

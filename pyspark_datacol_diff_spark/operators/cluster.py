@@ -152,9 +152,11 @@ def connected_components(
     action (the collect that materializes its ``localCheckpoint``)
     counts the non-NULL nodes whose label moved — exact, type-agnostic,
     no cross-round hash compare. A NULL node id never equi-joins: it is
-    labeled with the min of its neighbors' labels, its own old label is
-    NULL so it hooks only to itself, and it feeds no other node. Once
-    no non-NULL label moves, its label was computed from final labels.
+    labeled with the min of its neighbors' labels (NULL when its only
+    edges are NULL–NULL, which reach the propagate aggregate through a
+    union branch); its own old label is NULL so it hooks only to itself,
+    and it feeds no other node. Once no non-NULL
+    label moves, its label was computed from final labels.
     With AQE on, every shuffle stage is submitted as its own Spark job,
     so the job count per round is not fixed; the round count is the
     scale contract.
@@ -213,14 +215,23 @@ def connected_components(
                 True,
             )
         )
+        # NULL–NULL rows never equi-join, yet a NULL node whose only
+        # edges they are needs one to keep its `d = NULL` group. A union
+        # branch, not a LEFT join: an outer join cannot broadcast its
+        # preserved side, and on non-nullable ids the optimizer drops
+        # the branch, so the plan is the inner join's.
+        null_rows = e.filter(F.col("s").isNull() & F.col("d").isNull())
+        null_rows = null_rows.select("s", "d", F.lit(None).alias("comp"))
         for rounds in range(1, max_iter + 1):
             prop = (
                 e.join(labels, e["s"] == labels["node"])
-                .groupBy(e["d"])
+                .select(e["s"], e["d"], "comp")
+                .unionByName(null_rows)
+                .groupBy("d")
                 .agg(
                     F.min("comp").alias("q"),
                     F.min(
-                        F.when(e["s"] == e["d"], F.col("comp"))
+                        F.when(F.col("s") == F.col("d"), F.col("comp"))
                     ).alias("old"),
                 )
             )
@@ -353,29 +364,109 @@ def drop_near_dups(
     )
 
 
-def _pagerank_frames(
-    edges: DataFrame, src_col: str, dst_col: str,
-    weight_col: str | None = None, symmetric: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Shared PageRank setup: persisted ``(e, nodes, ew)`` frames.
+# pagerank_exact checkpoints its rank frame after every this-many rounds
+# and after the last (see its docstring for the measurements)
+_PAGERANK_CKPT_EVERY = 3
 
-    The edge list is scanned several times before the loop even starts
-    (node set reads src and dst, degree attachment) — persist it so an
-    expensive upstream (pair mining feeds this in the dedup pipelines)
-    runs once, not once per derivation. nodes/ew are additionally
-    persisted in their own right: they are reused EVERY round, and the
-    callers unpersist everything in a ``finally`` so a failed
-    iteration (executor loss, skew OOM) doesn't leave blocks pinned
-    for the session's lifetime.
 
-    Degree attachment is a map-side-combined ``groupBy(src).count()``
-    joined back: both sides read the src-partitioned persisted ``e``
-    with no further exchange, and every stage over the big side stays
-    AQE-splittable (a mega-hub never has to fit one window task).
-    Measured 4.6 -> 2.9 s on the sf0.1 co-purchase graph (iters=3)
-    against a ``count() over partitionBy(src)`` window once the src
-    repartition landed.
+def pagerank_exact(
+    edges: DataFrame,
+    *,
+    src_col: str = "src",
+    dst_col: str = "dst",
+    iterations: int = 3,
+    damping_num: int = 85,
+    damping_den: int = 100,
+    scale: int = 1_000_000,
+    seed_pred=None,
+    weight_col: str | None = None,
+    symmetric: bool = False,
+) -> DataFrame:
+    """Fixed-iteration PageRank in SCALED INTEGER arithmetic over a
+    directed edge list — the authority score for link graphs (document
+    citation/link dedup prioritization, crawl frontier ordering). Ranks
+    are longs in units of ``1/scale``; each round every node sends
+    ``rank div out_degree`` (integer division) to each out-neighbor
+    and receives ``(scale * (damping_den - damping_num)) div
+    damping_den + (damping_num * incoming_sum) div damping_den``.
+
+    Integer arithmetic makes the result deterministic: float per-node
+    sums run in nondeterministic partition order, so their low bits
+    vary run-to-run. Integer addition is exact and associative, and
+    both divisions here have non-negative operands (trunc == floor), so
+    the ranks are bit-for-bit identical across partitionings and
+    engines: the same unrolled iterations in ANSI SQL reproduce them
+    hash-exactly. The cost is quantization — each hop truncates up to
+    ``out_degree - 1 + damping_den - 1`` rank units, so with the
+    default ``scale`` of 1e6 the result tracks the float recursion to
+    ~1e-6 relative error per hop; raise ``scale`` for deeper iteration
+    counts.
+
+    Dangling nodes (no out-edges) keep receiving mass but their own
+    mass is DISCARDED each round — the classic simplified Spark
+    PageRank, not the mass-conserving formulation that redistributes
+    the dangling sum uniformly. Total mass is not conserved, scores
+    differ from true PageRank, and rank ORDER is not in general
+    preserved either (nodes fed mainly by dangling neighbors are
+    under-weighted relative to true PageRank). The trade buys one
+    fewer global aggregate + broadcast per round.
+
+    ``seed_pred`` (a callable ``node Column -> boolean Column``) turns
+    this into PERSONALIZED PageRank: initial mass and the per-round
+    reset land ONLY on nodes satisfying the predicate (NULL counts as
+    non-seed), so ranks measure proximity to the seed set — the
+    seed-relevance ordering (crawl frontiers, seed-document expansion
+    in a training-data pipeline) rather than global authority. Same
+    dataflow, same exact-integer replayability; the predicate itself
+    must be engine-portable for the oracle to unroll it.
+
+    ``weight_col`` makes the walk EDGE-WEIGHTED: each edge receives
+    ``(rank * w) div W_out`` instead of ``rank div out_degree`` (W_out
+    = the source's total outgoing weight) — co-occurrence counts,
+    similarity scores (pre-quantized to ints), link multiplicities.
+    Weights must be POSITIVE integers (a plan-side guard raises on
+    NULL/non-positive); overflow bound tightens to ``max_rank *
+    max_weight < 2^63`` — at default scale, weights into the tens of
+    thousands on million-node graphs.
+
+    ``symmetric=True`` asserts that every edge appears in both
+    directions, so the distinct sources are the node set.
+
+    Each round is two shuffles: the ranks-x-edges join keyed on src,
+    then a dst-keyed sum. Rank frames are eagerly ``localCheckpoint``-ed
+    after every 3rd round and after the last (lineage truncation — see
+    the module docstring; the last round must be materialized because
+    the ``finally`` unpersists the shared edge/node frames), retired
+    rank frames are freed via :func:`_free_ckpt`, and the reused
+    node/edge frames are persisted and released in ``finally``, so a
+    failed iteration (executor loss, skew OOM) leaves no blocks pinned.
+    An eager checkpoint is a full job, so short loops want few of them:
+    the 3-round co-purchase loop runs as ONE job over 6 chained
+    shuffles (measured 6.1 -> 4.7 s at sf0.1 against a checkpoint every
+    round). Long loops still need the lineage cut. Ranks are identical
+    for every schedule; wall time at 10 / 30 rounds on a random
+    300-node, 1.6k-edge graph (local[4] on 4 cores, median of 3 warm
+    calls) was 2.54 / 6.06 s checkpointing every round, 1.92 / 5.50 s
+    every 3rd round, and 3.25 / 11.73 s checkpointing only the last.
+    Overflow bound: ``damping_num * total_mass`` must fit in int64,
+    i.e. ``node_count * scale * damping_num < 2^63`` — at the default
+    scale that is ~10^11 nodes, far past any dedup pair graph.
+
+    Returns ``(node, rank)`` with ``rank`` long — one row per node
+    appearing anywhere in the edge list.
     """
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    if not (0 < damping_num < damping_den):
+        raise ValueError(
+            f"need 0 < damping_num < damping_den, got "
+            f"{damping_num}/{damping_den}"
+        )
+    if scale < damping_den:
+        raise ValueError(
+            f"scale must be >= damping_den, got {scale} < {damping_den}"
+        )
+    reset = (scale * (damping_den - damping_num)) // damping_den
     cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
     if weight_col is not None:
         # a non-positive, NULL, or fractional weight breaks the
@@ -406,8 +497,11 @@ def _pagerank_frames(
             )
             .alias("w")
         )
-    # hash-repartition by src BEFORE persisting: (a) the degree
-    # aggregate and every round's ranks-x-edges join need src
+    # The edge list is scanned several times before the loop starts
+    # (node set, degree attachment), so it is persisted: an expensive
+    # upstream (pair mining feeds this in the dedup pipelines) runs
+    # once. It is hash-repartitioned by src BEFORE persisting: (a) the
+    # degree aggregate and every round's ranks-x-edges join need src
     # partitioning — this shuffle is the one they would each have
     # paid anyway, paid once;
     # (b) upstream unions/explodes CONCATENATE partition lists (a
@@ -418,13 +512,9 @@ def _pagerank_frames(
     # (REPARTITION_BY_COL allows coalescing), so tiny graphs collapse
     # to a handful of tasks while huge ones keep full width.
     e = edges.select(*cols).repartition("src").persist()
-    agg = (
-        F.sum("w") if weight_col is not None else F.count(F.lit(1))
-    )
     if symmetric:
-        # caller asserts every edge appears in both directions (the
-        # symmetrized co-purchase graphs), so distinct sources ARE the
-        # node set — half the scan, one union branch fewer
+        # distinct sources ARE the node set — half the scan, one union
+        # branch fewer
         nodes = e.select(F.col("src").alias("node")).distinct().persist()
     else:
         nodes = (
@@ -433,182 +523,14 @@ def _pagerank_frames(
             .distinct()
             .persist()
         )
-    out_deg = e.groupBy("src").agg(agg.alias("deg"))
-    ew = e.join(out_deg, "src").persist()
-    return e, nodes, ew
-
-
-def pagerank(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 10,
-    damping: float = 0.85,
-    checkpoint_interval: int = 1,
-    symmetric: bool = False,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list — the
-    authority score for link graphs (document citation/link dedup
-    prioritization, crawl frontier ordering). Deterministic by
-    construction: a fixed iteration count (no float-tolerance
-    convergence test) and per-node aggregation make the result stable
-    across partitionings up to float summation order.
-
-    Each round is the canonical two-shuffle dataflow: ranks join edges
-    on src (contribution = rank/out_degree routed to dst), then a
-    dst-keyed sum. Dangling nodes (no out-edges) keep receiving mass
-    but their own mass is DISCARDED each round — the classic
-    simplified Spark PageRank, not the mass-conserving formulation
-    that redistributes the dangling sum uniformly. Total mass is not
-    conserved, scores differ from true PageRank, and rank ORDER is not
-    in general preserved either (nodes fed mainly by dangling
-    neighbors are under-weighted relative to the full variant). The
-    trade buys one fewer global aggregate + broadcast per round; use a
-    mass-conserving implementation when fidelity to true PageRank
-    matters rather than a cheap authority ordering.
-    Rank frames are checkpointed every ``checkpoint_interval`` rounds
-    (lineage truncation — see the module docstring) and the previous
-    checkpoint's blocks are freed, like the components loop — same
-    iterative-Spark pitfall (exponential re-evaluation / unbounded
-    storage growth), same fix. The FINAL round always checkpoints
-    eagerly (the ``finally`` unpersists the shared edge/node frames,
-    so the returned frame must already be materialized). An eager
-    checkpoint is a full job, so for SHORT fixed iteration counts a
-    larger interval collapses the loop into one job over a few chained
-    shuffles — measured 6.1 -> 4.7 s for 3 rounds on the sf0.1
-    co-purchase graph with interval >= iterations; the default interval
-    of 1 stays right for long runs, where unbounded lineage is the
-    bigger enemy.
-
-    Returns ``(node, rank)`` — one row per node appearing anywhere in
-    the edge list.
-    """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
-        )
-    e, nodes, ew = _pagerank_frames(
-        edges, src_col, dst_col, symmetric=symmetric
-    )
-    try:
-        ranks = nodes.withColumn("rank", F.lit(1.0))
-        prev = None
-        for i in range(iterations):
-            contribs = ew.join(
-                ranks, ew["src"] == ranks["node"]
-            ).select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            summed = contribs.groupBy("node").agg(F.sum("c").alias("s"))
-            ranks = nodes.join(summed, "node", "left").select(
-                "node",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("s", F.lit(0.0))
-                ).alias("rank"),
-            )
-            if i == iterations - 1 or (i + 1) % checkpoint_interval == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-                if prev is not None:
-                    _free_ckpt(prev)  # retired round: never read again
-                prev = ranks
-    finally:
-        ew.unpersist()
-        nodes.unpersist()
-        e.unpersist()
-    return ranks
-
-
-def pagerank_exact(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 3,
-    damping_num: int = 85,
-    damping_den: int = 100,
-    scale: int = 1_000_000,
-    checkpoint_interval: int = 1,
-    seed_pred=None,
-    weight_col: str | None = None,
-    symmetric: bool = False,
-) -> DataFrame:
-    """Fixed-iteration PageRank in SCALED INTEGER arithmetic — the
-    oracle-replayable variant of :func:`pagerank`. Ranks are longs in
-    units of ``1/scale``; each round every node sends
-    ``rank div out_degree`` (integer division) to each out-neighbor
-    and receives ``(scale * (damping_den - damping_num)) div
-    damping_den + (damping_num * incoming_sum) div damping_den``.
-
-    ``seed_pred`` (a callable ``node Column -> boolean Column``) turns
-    this into PERSONALIZED PageRank: initial mass and the per-round
-    reset land ONLY on nodes satisfying the predicate (NULL counts as
-    non-seed), so ranks measure proximity to the seed set — the
-    seed-relevance ordering (crawl frontiers, seed-document expansion
-    in a training-data pipeline) rather than global authority. Same
-    dataflow, same exact-integer replayability; the predicate itself
-    must be engine-portable for the oracle to unroll it.
-
-    ``weight_col`` makes the walk EDGE-WEIGHTED: each edge receives
-    ``(rank * w) div W_out`` instead of ``rank div out_degree`` (W_out
-    = the source's total outgoing weight) — co-occurrence counts,
-    similarity scores (pre-quantized to ints), link multiplicities.
-    Weights must be POSITIVE integers (a plan-side guard raises on
-    NULL/non-positive); overflow bound tightens to ``max_rank *
-    max_weight < 2^63`` — at default scale, weights into the tens of
-    thousands on million-node graphs.
-
-    Why a second variant exists: the float formulation's per-node sums
-    run in nondeterministic partition order, so its low bits vary
-    run-to-run — fine for ranking, unusable for a hash-exact oracle or
-    a bit-for-bit incremental replay. Integer addition is exact and
-    associative, and both divisions here have non-negative operands
-    (trunc == floor), so this variant is deterministic bit-for-bit
-    across partitionings and engines: the same unrolled iterations in
-    ANSI SQL reproduce it hash-exactly. The cost is quantization —
-    each hop truncates up to ``out_degree - 1 + damping_den - 1``
-    rank units, so with the default ``scale`` of 1e6 the result
-    tracks the same simplified (dangling-mass-discarding, see
-    :func:`pagerank`) float recursion to ~1e-6 relative error per
-    hop; raise ``scale`` for deeper iteration counts.
-
-    Same dataflow and scale shape as :func:`pagerank` (two shuffles
-    per round — ranks-x-edges join keyed on src, then a dst-keyed
-    sum), same iterative-loop hygiene (``localCheckpoint`` lineage
-    truncation every ``checkpoint_interval`` rounds with the final
-    round always eager, retired rounds freed via :func:`_free_ckpt`,
-    reused node/edge frames persisted and released in ``finally`` —
-    see :func:`pagerank` for the short-loop interval trade).
-    Overflow bound: ``damping_num * total_mass`` must fit in int64,
-    i.e. ``node_count * scale * damping_num < 2^63`` — at the default
-    scale that is ~10^11 nodes, far past any dedup pair graph.
-
-    Returns ``(node, rank)`` with ``rank`` long — one row per node
-    appearing anywhere in the edge list.
-    """
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if not (0 < damping_num < damping_den):
-        raise ValueError(
-            f"need 0 < damping_num < damping_den, got "
-            f"{damping_num}/{damping_den}"
-        )
-    if scale < damping_den:
-        raise ValueError(
-            f"scale must be >= damping_den, got {scale} < {damping_den}"
-        )
-    if checkpoint_interval < 1:
-        raise ValueError(
-            f"checkpoint_interval must be >= 1, got {checkpoint_interval}"
-        )
-    reset = (scale * (damping_den - damping_num)) // damping_den
-    e, nodes, ew = _pagerank_frames(
-        edges, src_col, dst_col, weight_col, symmetric=symmetric
-    )
+    # degree attachment is a map-side-combined groupBy(src) joined back:
+    # both sides read the src-partitioned persisted `e` with no further
+    # exchange, and every stage over the big side stays AQE-splittable
+    # (a mega-hub never has to fit one window task). Measured 4.6 ->
+    # 2.9 s on the sf0.1 co-purchase graph (iters=3) against a
+    # `count() over partitionBy(src)` window.
+    deg = F.sum("w") if weight_col is not None else F.count(F.lit(1))
+    ew = e.join(e.groupBy("src").agg(deg.alias("deg")), "src").persist()
     contrib_expr = (
         "(rank * w) div deg" if weight_col is not None else "rank div deg"
     )
@@ -666,7 +588,7 @@ def pagerank_exact(
                     f"div {damping_den}L"
                 ).alias("rank"),
             )
-            if i == iterations - 1 or (i + 1) % checkpoint_interval == 0:
+            if i == iterations - 1 or (i + 1) % _PAGERANK_CKPT_EVERY == 0:
                 ranks = ranks.localCheckpoint(eager=True)
                 if prev is not None:
                     _free_ckpt(prev)  # retired round: never read again

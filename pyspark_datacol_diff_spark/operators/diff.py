@@ -468,24 +468,22 @@ def flag_counts(diff_df: DataFrame) -> DataFrame:
     return diff_df.groupBy(FLAG_COL).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def column_mismatch_counts(diff_df: DataFrame, *, sort: bool = True) -> DataFrame:
+def column_mismatch_counts(diff_df: DataFrame) -> DataFrame:
     """Per-column mismatch counts in ONE explode+aggregate (vs one
     filter+count job per column, reference :146-149).
 
     Columns: ``ColName``, ``Count`` (reference's pandas summary names,
-    :153), ordered by descending count. Partial aggregation happens
-    map-side before the (tiny, n_cols-row) shuffle. ``sort=False``
-    drops the display ordering — it is a presentation contract over an
-    n_cols-row frame, so consumers that re-sort or compare
-    order-insensitively can skip the range-partitioning exchange
-    entirely (and a plan linter then sees no total-order sort).
+    :153), unordered. Partial aggregation happens map-side before the
+    (tiny, n_cols-row) shuffle. The display ordering by descending count
+    is the pandas facade's (:func:`compute_dataframe_diff`); a
+    distributed sort here would add a range-partitioning exchange for an
+    n_cols-row frame.
     """
-    out = (
+    return (
         diff_df.select(F.explode(F.col(f"{DIFF_ARRAY_COL}.col_name")).alias("ColName"))
         .groupBy("ColName")
         .agg(F.count(F.lit(1)).alias("Count"))
     )
-    return out.orderBy(F.desc("Count"), "ColName") if sort else out
 
 
 _ALL_FLAGS = (FLAG_NODIFF, FLAG_S1_ONLY, FLAG_S2_ONLY, FLAG_DIFF)
@@ -523,44 +521,6 @@ def diff_summary_stats(
             for i, c in enumerate(compare_cols)
         ],
     )
-
-
-def diff_summary(
-    diff_df: DataFrame, compare_cols: Sequence[str] | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Both summaries ``(flag_counts, column_mismatch_counts)``.
-
-    With ``compare_cols`` (use :func:`resolve_compare_cols` to get the
-    list :func:`diff` used): computed via ONE single-pass aggregate
-    (:func:`diff_summary_stats`) — one job, one scan — and returned as
-    two small local DataFrames (n_flags + n_cols scalars cross the
-    driver, nothing data-sized). Without it, falls back to the two lazy
-    aggregates, which scan the diff once EACH when both are consumed —
-    persist the diff at that branch point if you take this path on a
-    big input.
-    """
-    if compare_cols is None:
-        return flag_counts(diff_df), column_mismatch_counts(diff_df)
-    row = diff_summary_stats(diff_df, compare_cols).collect()[0]
-    spark = diff_df.sparkSession
-    flag_rows = [
-        (f, row[f"flag_{i}"])
-        for i, f in enumerate(_ALL_FLAGS)
-        if row[f"flag_{i}"] > 0
-    ]
-    col_rows = sorted(
-        (
-            (c, row[f"col_{i}"])
-            for i, c in enumerate(compare_cols)
-            if row[f"col_{i}"] > 0
-        ),
-        key=lambda t: (-t[1], t[0]),
-    )
-    fdf = spark.createDataFrame(
-        flag_rows or [], schema=f"{FLAG_COL} string, cnt long"
-    )
-    cdf = spark.createDataFrame(col_rows or [], schema="ColName string, Count long")
-    return fdf, cdf
 
 
 def apply_diff(
@@ -793,7 +753,7 @@ def table_digest(
     stacked = df.select(
         *[F.col(c).cast("string").alias(c) for c in names]
     ).unpivot([], names, "col_name", "v")
-    h = F.conv(F.substring(F.md5(F.col("v")), 1, 15), 16, 10).cast("long")
+    h = _md5_int60(F.col("v"))
     return (
         stacked.groupBy("col_name")
         .agg(

@@ -223,63 +223,6 @@ def assign_cells(
     return base.withColumn("cid", best["cid"])
 
 
-def assign_cells_arrow(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    keep_cols: tuple = (),
-) -> DataFrame:
-    """IVF cell assignment via Arrow-batched numpy: one matmul against
-    the broadcast centroid matrix per batch, argmax per row. Same
-    zero-Exchange shape as :func:`assign_cells` but the centroid table
-    lives in a closure, not the expression tree — at real IVF scale
-    (nlist 256-4096) the Column formulation would bake nlist x dim
-    literal nodes into the plan (analysis/codegen cost grows with the
-    plan, measured seconds at nlist=16 already), while this path is
-    O(1) plan size and BLAS throughput. Ties broken toward the lower
-    cell id (matching cell_ranks' sort order).
-
-    Returns (id, vec, *keep_cols, __na norm, cid) — same contract as
-    assign_cells, keep_cols riding the projection free.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cm = np.array(centroids, dtype=np.float64)  # (nlist, dim)
-    cn = np.linalg.norm(cm, axis=1)
-    cn[cn == 0] = np.nan
-
-    id_t = corpus.schema[id_col].dataType.simpleString()
-    vec_t = corpus.schema[vec_col].dataType.simpleString()
-    keep_t = {
-        c: corpus.schema[c].dataType.simpleString() for c in keep_cols
-    }
-    keep_schema = "".join(f", {c} {t}" for c, t in keep_t.items())
-    out_schema = (
-        f"{id_col} {id_t}, {vec_col} {vec_t}{keep_schema}, __na double, cid int"
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            m = np.array(list(pdf[vec_col]), dtype=np.float64)  # (b, dim)
-            na = np.linalg.norm(m, axis=1)
-            sims = (m @ cm.T) / np.outer(na, cn)
-            out = {id_col: pdf[id_col], vec_col: pdf[vec_col]}
-            for c in keep_cols:
-                out[c] = pdf[c]
-            out["__na"] = na
-            out["cid"] = np.argmax(sims, axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    from ..sources import balance_partitions
-
-    return balance_partitions(corpus).select(
-        id_col, vec_col, *keep_cols
-    ).mapInPandas(assign, out_schema)
-
-
 def auto_nlist(
     corpus: DataFrame, *, floor: int = 16, cap: int = 65536
 ) -> int:
@@ -335,25 +278,20 @@ def ivf_topk(
     nprobe: int | str = 4,
     seed: int = 42,
     exclude_self: bool = True,
-    fit_fraction: float = 0.25,
-    max_iter: int = 10,
-    init_mode: str = "k-means||",
-    assign_method: str = "expr",
-    fit_method: str = "kmeans",
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the scale path when the
     brute-force corpus scan per query is too expensive.
 
-    Train ``nlist`` k-means centroids on a ``fit_fraction`` sample (the
-    fit is a driver-coordinated iterative job; centroids are stable under
-    sampling and the index only needs approximate cells), assign every
-    corpus vector to its nearest centroid with a ZERO-SHUFFLE per-row
-    argmax over the literal centroid array (see :func:`assign_cells`),
-    then probe only the ``nprobe`` nearest cells per query: the candidate
-    set shrinks ~nlist/nprobe-fold versus brute force. Recall < 1 by
-    construction; raise nprobe to trade compute for recall. With
-    ``nprobe == nlist`` every cell is probed and the result equals the
-    exact brute-force top-k — the oracle-verifiable configuration.
+    The ``nlist`` centroids are hash-sampled corpus vectors
+    (:func:`_sample_centroids`: one TakeOrdered job, no ML fit, and a
+    deterministic index build). Every corpus vector is assigned to its
+    nearest centroid with a ZERO-SHUFFLE per-row argmax over the
+    literal centroid array (see :func:`assign_cells`), then each query
+    probes only its ``nprobe`` nearest cells: the candidate set shrinks
+    ~nlist/nprobe-fold versus brute force. Recall < 1 by construction;
+    raise nprobe to trade compute for recall. With ``nprobe == nlist``
+    every cell is probed and the result equals the exact brute-force
+    top-k — the oracle-verifiable configuration.
 
     At 100 TB: the corpus-side assignment is a pure projection (the
     centroid table is nlist x dim literal floats, KB, folded into the
@@ -372,76 +310,12 @@ def ivf_topk(
     nlist = _resolve_nlist(nlist, corpus)
     if nprobe == "all":
         nprobe = nlist
-    if fit_method == "sample":
-        centroids = _sample_centroids(corpus, id_col, vec_col, nlist, seed)
-        return _ivf_probe(
-            corpus, queries, k, centroids,
-            id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-            query_vec_col=query_vec_col, nprobe=nprobe,
-            exclude_self=exclude_self, assign_method=assign_method,
-        )
-    if fit_method == "exact":
-        # deterministic trainer (round 6): integer-exact Lloyd
-        # (:func:`kmeans_exact_assign`) — same index quality class as
-        # the ml fit, but the centroids are bit-reproducible across
-        # runs/partitionings/engines, so the whole IVF index build
-        # becomes replayable (the ml fit's float low bits are not)
-        quant = 1_000_000
-        cents: list = []
-        # the refit loop runs eagerly inside the call (bounded
-        # index-grain collects); the returned lazy assignment frame is
-        # not needed here — only the trained centroids are
-        kmeans_exact_assign(
-            corpus,
-            id_col=id_col,
-            vec_col=vec_col,
-            nlist=nlist,
-            iterations=max_iter,
-            quant=quant,
-            centroids_out=cents,
-        )
-        centroids = [[v / quant for v in c] for c in cents]
-        return _ivf_probe(
-            corpus, queries, k, centroids,
-            id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
-            query_vec_col=query_vec_col, nprobe=nprobe,
-            exclude_self=exclude_self, assign_method=assign_method,
-        )
-
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    fit_src = (
-        corpus.sample(fraction=fit_fraction, seed=seed)
-        if fit_fraction < 1.0
-        else corpus
-    )
-    # the sample is small by construction: collapse it to a few
-    # partitions and cache it, or every Lloyd iteration pays
-    # full-corpus task-scheduling overhead (32-partition jobs over a
-    # few hundred rows — measured 4x the whole fit cost) and re-reads
-    # the source
-    feats = (
-        fit_src.select(
-            array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-        )
-        .coalesce(4)
-        .cache()
-    )
-    # the index only needs approximately-balanced cells, not converged
-    # clusters: capped iterations halve the fit cost with no measurable
-    # recall change (pytest recall gate). init_mode='random' skips the
-    # k-means|| init passes (each one a full job over the sample) — the
-    # standard choice for IVF coarse quantizers, where a handful of
-    # Lloyd iterations from random seeds gives equivalent cell balance.
-    km = KMeans(k=nlist, seed=seed, maxIter=max_iter, initMode=init_mode).fit(feats)
-    centroids = [[float(x) for x in c] for c in km.clusterCenters()]
-    feats.unpersist()
+    centroids = _sample_centroids(corpus, id_col, vec_col, nlist, seed)
     return _ivf_probe(
         corpus, queries, k, centroids,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
         query_vec_col=query_vec_col, nprobe=nprobe,
-        exclude_self=exclude_self, assign_method=assign_method,
+        exclude_self=exclude_self,
     )
 
 
@@ -454,7 +328,8 @@ def _sample_centroids(
     balance; random centroids trade some balance for zero fit cost) —
     exactly right when nprobe == nlist (result is exact regardless of
     centroids) or when a recall gate passes without trained cells.
-    Shared by ivf_topk(fit_method='sample') and hard_negatives_ivf."""
+    The coarse quantizer of :func:`ivf_topk` and
+    :func:`hard_negatives_ivf`."""
     rows = (
         corpus.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
@@ -476,30 +351,21 @@ def _ivf_probe(
     query_vec_col: str,
     nprobe: int,
     exclude_self: bool,
-    assign_method: str,
     label_col: str | None = None,
     query_label_col: str | None = None,
 ) -> DataFrame:
-    """Assignment + probe + local top-k shared by every coarse-quantizer
-    flavor (trained k-means or hash-sampled centroids). With
+    """Assignment + probe + local top-k shared by :func:`ivf_topk` and
+    :func:`hard_negatives_ivf`. With
     ``label_col``/``query_label_col`` set, only DIFFERENT-label pairs
     are scored (hard-negative mining — the label column rides the cell
     assignment projection and the inequality prunes candidates right
     at the probe join, before any dot product)."""
-    # 'expr' bakes the centroids into the plan as literals (pure
-    # Column, WholeStageCodegen) — right for small nlist; 'arrow' keeps
-    # the centroid matrix in a closure and does one BLAS matmul per
-    # batch — right for real IVF nlist (plan-size stays O(1)). Both are
-    # exchange-free.
+    # the centroids are baked into the plan as one literal (pure
+    # Column, WholeStageCodegen); the assignment is exchange-free
     keep = (label_col,) if label_col else ()
-    if assign_method == "arrow":
-        assigned = assign_cells_arrow(
-            corpus, centroids, id_col=id_col, vec_col=vec_col, keep_cols=keep
-        )
-    else:
-        assigned = assign_cells(
-            corpus, centroids, id_col=id_col, vec_col=vec_col, keep_cols=keep
-        )
+    assigned = assign_cells(
+        corpus, centroids, id_col=id_col, vec_col=vec_col, keep_cols=keep
+    )
 
     qcols = [query_id_col, query_vec_col]
     if query_label_col:
@@ -571,35 +437,6 @@ def dim_sums_exact(
             F.floor(F.col("__x").cast("double") * F.lit(float(10**scale))).cast("long")
         ).alias(sum_col),
         F.count(F.lit(1)).alias("n_vecs"),
-    )
-
-
-def group_centroids(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-group mean vector via ``pyspark.ml.stat.Summarizer`` — the
-    JVM-side fast path (no explode: one pass accumulating a running
-    vector sum per group). Float summation order is partitioning-
-    dependent, so results are approximate to the last ulp; use
-    :func:`dim_sums_exact` when cross-engine determinism matters.
-
-    Returns ``(group_col, centroid array<double>, n_vecs)``.
-    """
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-    from pyspark.ml.stat import Summarizer
-
-    feats = df.select(
-        F.col(group_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("__v"),
-    )
-    out = feats.groupBy(group_col).agg(
-        Summarizer.mean(F.col("__v")).alias("__mean"),
-        F.count(F.lit(1)).alias("n_vecs"),
-    )
-    return out.select(
-        group_col, vector_to_array(F.col("__mean")).alias("centroid"), "n_vecs"
     )
 
 
@@ -675,7 +512,6 @@ def hard_negatives_ivf(
     nlist: int | str = 16,
     nprobe: int = 4,
     seed: int = 42,
-    assign_method: str = "expr",
 ) -> DataFrame:
     """IVF-backed hard-negative mining — the scale path
     :func:`hard_negatives` names in its contract, implemented: instead
@@ -700,8 +536,7 @@ def hard_negatives_ivf(
         corpus, queries, k, centroids,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
         query_vec_col=query_vec_col, nprobe=nprobe, exclude_self=True,
-        assign_method=assign_method, label_col=label_col,
-        query_label_col=query_label_col,
+        label_col=label_col, query_label_col=query_label_col,
     )
 
 
@@ -1015,13 +850,10 @@ def pq_codebooks(
     corpus: DataFrame,
     *,
     dim: int,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     m: int = 8,
     k: int = 16,
     seed: int = 42,
-    fit_method: str = "sample",
-    fit_fraction: float = 0.25,
     max_iter: int = 10,
 ) -> list[list[list[float]]]:
     """Train product-quantization codebooks: the vector is split into
@@ -1031,45 +863,22 @@ def pq_codebooks(
     memory cut — the standard billion-scale ANN layout, Jégou et al.
     2011, public method).
 
-    ``fit_method='sample'``: ``k`` deterministic hash-ordered corpus
-    vectors donate their subvectors as centroids — zero ML fit, fully
-    deterministic, the right default for recall-gated pipelines (same
-    rationale as ivf_topk's sampled coarse quantizer).
-    ``fit_method='kmeans'``: per-subspace k-means on a sampled slice —
-    lower distortion, iterative driver-coordinated fit; the codebook is
-    an index artifact you train once and reuse.
+    Each subspace's codebook is a k-means fit over the full corpus —
+    an iterative driver-coordinated fit; the codebook is an index
+    artifact you train once and reuse.
 
     Returns ``codebooks[s][c] = centroid vector (dim/m floats)``.
     """
     if dim % m:
         raise ValueError(f"dim ({dim}) must be divisible by m ({m})")
     sub = dim // m
-    if fit_method == "sample":
-        rows = (
-            corpus.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)))
-            .limit(k)
-            .collect()
-        )
-        vecs = [[float(x) for x in r[1]] for r in rows]
-        if len(vecs) < k:
-            raise ValueError(f"corpus has {len(vecs)} rows < k={k}")
-        return [
-            [v[s * sub : (s + 1) * sub] for v in vecs] for s in range(m)
-        ]
-    if fit_method != "kmeans":
-        raise ValueError(f"fit_method must be sample|kmeans, got {fit_method!r}")
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    fit_src = (
-        corpus.sample(fraction=fit_fraction, seed=seed)
-        if fit_fraction < 1.0
-        else corpus
-    )
-    # one cached pass carries every subspace slice; m fits reuse it
-    # (same sample-collapse rationale as ivf_topk's fit)
-    slices = fit_src.select(
+    # one cached pass carries every subspace slice; m fits reuse it.
+    # Collapsed to a few partitions: every Lloyd iteration is a job, and
+    # full-width task scheduling per iteration would dominate the fit
+    slices = corpus.select(
         *[
             array_to_vector(
                 F.slice(F.col(vec_col), s * sub + 1, sub).cast("array<double>")
@@ -1530,8 +1339,8 @@ def srp_diverse_sample(
 
 
 # ---------------------------------------------------------------------------
-# exact-integer k-means (round 6) — the deterministic coarse-quantizer
-# trainer the IVF path can replay cross-engine
+# exact-integer k-means (round 6) — the deterministic cell trainer the
+# integer IVF paths replay cross-engine
 # ---------------------------------------------------------------------------
 
 def _tdiv(a: int, b: int) -> int:
@@ -1607,8 +1416,9 @@ def kmeans_exact_assign(
     vector_out_col: str | None = None,
 ) -> DataFrame:
     """Fixed-iteration Lloyd k-means in SCALED INTEGER arithmetic —
-    the oracle-replayable clustering that trains an IVF coarse
-    quantizer (:func:`ivf_topk`) deterministically. The float
+    the oracle-replayable clustering that trains the integer IVF cells
+    of :func:`mutual_knn_pairs` (``method="ivf"``) and the buckets of
+    :func:`kmeans_bucketed_cosine_pairs` deterministically. The float
     ``pyspark.ml`` fit's partition-order-dependent low bits cannot be
     hash-oracled; this variant is bit-for-bit stable across
     partitionings and engines, exactly like
@@ -1635,8 +1445,8 @@ def kmeans_exact_assign(
     normalized embeddings that is dims into the tens of thousands.
 
     Returns ``(id_col, cell)``; pass ``centroids_out=[]`` to also
-    receive the final quantized centroid lists (e.g. to feed
-    :func:`ivf_topk` via a pre-trained path).
+    receive the final quantized centroid lists (the integer IVF probe
+    of :func:`mutual_knn_pairs` reads them).
 
     Reference scope note: the reference library has no clustering of
     any kind (SURVEY.md §2.7); north-star extension surface.

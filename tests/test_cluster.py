@@ -122,6 +122,9 @@ def test_cc_null_ids(spark):
     )
     got = _comps(connected_components(edges))
     assert got == {1: 1, 2: 1, 5: 5, 6: 5, 7: 7, 8: 7, None: 1}
+    # a NULL node whose only edges are NULL–NULL still gets its row
+    lone = spark.createDataFrame([(1, 2), (None, None)], "id_a long, id_b long")
+    assert _comps(connected_components(lone)) == {1: 1, 2: 1, None: None}
 
 
 def _permuted_path(n, seed):
@@ -162,46 +165,28 @@ def test_cc_matches_union_find_property(spark, edges):
     assert _comps(connected_components(df)) == _union_find(edges, nodes)
 
 
-def test_pagerank_hand_computed_chain(spark):
-    from pyspark_datacol_diff_spark.operators.cluster import pagerank
-
-    # a -> b -> c, one iteration from uniform 1.0:
-    # rank(x) = 0.15 + 0.85 * sum(in-contribs); deg(a)=deg(b)=1
-    e = spark.createDataFrame([("a", "b"), ("b", "c")], "src string, dst string")
-    r = {x["node"]: x["rank"] for x in pagerank(e, iterations=1).collect()}
-    assert abs(r["a"] - 0.15) < 1e-12          # no in-edges
-    assert abs(r["b"] - (0.15 + 0.85 * 1.0)) < 1e-12
-    assert abs(r["c"] - (0.15 + 0.85 * 1.0)) < 1e-12
-
-
 def test_pagerank_authority_ordering_and_determinism(spark):
-    from pyspark_datacol_diff_spark.operators.cluster import pagerank
+    from pyspark_datacol_diff_spark.operators.cluster import pagerank_exact
 
     # star: everyone links to 'hub'; hub must outrank all, and two runs
-    # (different partitioning) agree. 30 rounds: the hub<->n0 cycle
-    # oscillates with period 2 and the amplitude decays as 0.85^2 per
-    # round, so the fixpoint ordering (hub ~4.2 > n0 ~3.7) needs the
-    # transient gone, not just a few rounds
+    # (different partitioning) agree bit for bit. 30 rounds cross 10
+    # rank checkpoints. The hub<->n0 cycle oscillates with period 2 and
+    # the amplitude decays as 0.85^2 per round, so the fixpoint ordering
+    # (hub ~4.2 > n0 ~3.7, in units of scale) needs the transient gone,
+    # not just a few rounds
     edges = [(f"n{i}", "hub") for i in range(8)] + [("hub", "n0")]
     e = spark.createDataFrame(edges, "src string, dst string")
-    r1 = {x["node"]: x["rank"] for x in pagerank(e, iterations=30).collect()}
+    r1 = {
+        x["node"]: x["rank"]
+        for x in pagerank_exact(e, iterations=30).collect()
+    }
     r2 = {
         x["node"]: x["rank"]
-        for x in pagerank(e.repartition(7), iterations=30).collect()
+        for x in pagerank_exact(e.repartition(7), iterations=30).collect()
     }
     assert max(r1, key=r1.get) == "hub"
     assert r1["hub"] > r1["n0"] > r1["n1"]  # n0 gets hub's mass too
-    assert set(r1) == set(r2)
-    for k in r1:
-        assert abs(r1[k] - r2[k]) < 1e-9
-
-
-def test_pagerank_rejects_zero_iterations(spark):
-    from pyspark_datacol_diff_spark.operators.cluster import pagerank
-
-    e = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(ValueError, match="iterations"):
-        pagerank(e, iterations=0)
+    assert r1 == r2
 
 
 def test_round_count_pin_dense_cluster(spark):
@@ -400,35 +385,6 @@ def test_pagerank_exact_validation(spark):
         pagerank_exact(e, damping_num=100, damping_den=100)
     with pytest.raises(ValueError, match="scale"):
         pagerank_exact(e, scale=10, damping_den=100)
-
-
-def test_pagerank_exact_strategy_knobs_are_result_invariant(spark):
-    """The checkpoint_interval knob is PHYSICAL-only: every interval
-    returns the identical exact-integer ranking."""
-    import random as _rnd
-
-    from pyspark_datacol_diff_spark.operators.cluster import pagerank_exact
-
-    _rnd.seed(43)
-    edges = sorted(
-        {(_rnd.randint(0, 29), _rnd.randint(0, 29)) for _ in range(120)}
-    )
-    edges = [(a, b) for a, b in edges if a != b]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    base = sorted(
-        (x["node"], x["rank"])
-        for x in pagerank_exact(e, iterations=3).collect()
-    )
-    for ci in (3, 2, 1, 4):
-        got = sorted(
-            (x["node"], x["rank"])
-            for x in pagerank_exact(
-                e, iterations=3, checkpoint_interval=ci
-            ).collect()
-        )
-        assert got == base, ci
-    with pytest.raises(ValueError, match="checkpoint_interval"):
-        pagerank_exact(e, checkpoint_interval=0)
 
 
 class TestPersonalizedPagerank:

@@ -298,25 +298,33 @@ def test_table_digest_single_scan_single_shuffle(spark):
 
 
 def test_diff_summary_single_pass_matches_lazy_pair(spark, employee_pair):
-    """The combined one-job summary must agree with the two lazy
-    aggregates on both outputs (zero-count flags/columns omitted)."""
+    """The one-job summary must agree with the two lazy aggregates on
+    both outputs (the lazy pair omits zero-count flags/columns)."""
     from pyspark_datacol_diff_spark.operators.diff import (
+        _ALL_FLAGS,
+        column_mismatch_counts,
         diff,
-        diff_summary,
+        diff_summary_stats,
+        flag_counts,
         resolve_compare_cols,
     )
 
     s1, s2, _ = employee_pair
     d = diff(s1, s2, ["id"])
     cols = resolve_compare_cols(s1, ["id"])
-    f_lazy, c_lazy = diff_summary(d)
-    f_one, c_one = diff_summary(d, cols)
-    assert {(r["Flag"], r["cnt"]) for r in f_lazy.collect()} == {
-        (r["Flag"], r["cnt"]) for r in f_one.collect()
+    row = diff_summary_stats(d, cols).collect()[0]
+    one_flags = {
+        (f, row[f"flag_{i}"]) for i, f in enumerate(_ALL_FLAGS)
+        if row[f"flag_{i}"] > 0
     }
-    assert [(r["ColName"], r["Count"]) for r in c_lazy.collect()] == [
-        (r["ColName"], r["Count"]) for r in c_one.collect()
-    ]
+    one_cols = {
+        (c, row[f"col_{i}"]) for i, c in enumerate(cols) if row[f"col_{i}"] > 0
+    }
+    assert one_flags == {(r["Flag"], r["cnt"]) for r in flag_counts(d).collect()}
+    assert one_cols == {
+        (r["ColName"], r["Count"]) for r in column_mismatch_counts(d).collect()
+    }
+    assert one_cols  # the fixture has mismatching columns
 
 
 def test_diff_summary_stats_single_scan_no_explode(spark, employee_pair):

@@ -186,45 +186,6 @@ def test_dim_sums_exact_matches_numpy_int_space(spark):
     assert got == expect
 
 
-def test_group_centroids_close_to_exact(spark):
-    df, _, _ = make_vectors(spark, n=20)
-    grouped = df.withColumn("g", (F.col("vec_id") % 2).cast("string"))
-    fast = {
-        r["g"]: (r["centroid"], r["n_vecs"])
-        for r in SIM.group_centroids(grouped, "g", "embedding").collect()
-    }
-    exact = {
-        (r["g"], r["pos"]): r["dim_sum_e6"] / 1e6 / r["n_vecs"]
-        for r in SIM.dim_sums_exact(grouped, "g", "embedding").collect()
-    }
-    for g, (cent, n) in fast.items():
-        assert n == 10
-        for pos, x in enumerate(cent):
-            assert x == pytest.approx(exact[(g, pos)], abs=2e-6)
-
-
-def test_assign_cells_arrow_matches_expr(spark):
-    df, _, _ = make_vectors(spark, n=30)
-    centroids = [[float(i == j) * 2 for j in range(16)] for i in range(4)]
-    a = {
-        r["vec_id"]: r["cid"]
-        for r in SIM.assign_cells(df, centroids).collect()
-    }
-    b = {
-        r["vec_id"]: r["cid"]
-        for r in SIM.assign_cells_arrow(df, centroids).collect()
-    }
-    assert a == b
-    # arrow path stays exchange-free like the expr path
-    plan = (
-        SIM.assign_cells_arrow(df, centroids)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-
-
 def test_ivf_sample_fit_matches_exact_full_probe(spark):
     import pyspark_datacol_diff_spark.operators.similarity as SIM
     from pyspark.sql import functions as F
@@ -244,9 +205,7 @@ def test_ivf_sample_fit_matches_exact_full_probe(spark):
     }
     sampled = {
         (r["qid"], r["rank"]): r["neighbor_id"]
-        for r in SIM.ivf_topk(
-            df, q, 3, nlist=4, nprobe=4, fit_method="sample"
-        ).collect()
+        for r in SIM.ivf_topk(df, q, 3, nlist=4, nprobe=4).collect()
     }
     assert sampled == exact
 
@@ -414,8 +373,7 @@ def test_pq_refined_recall_beats_raw_pq(spark):
     q = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    cb = pq_codebooks(emb, dim=64, m=8, k=16, fit_method="kmeans",
-                      fit_fraction=1.0)
+    cb = pq_codebooks(emb, dim=64, m=8, k=16)
     l2 = F.aggregate(
         F.zip_with("embedding", "qv",
                    lambda x, y: (x.cast("double") - y.cast("double"))
@@ -885,32 +843,6 @@ class TestKmeansExact:
         ).collect()
         assert len(out) == 2 and all(len(c) == 3 for c in out)
         assert all(isinstance(x, int) for c in out for x in c)
-
-    def test_ivf_exact_fit_path_recall(self, spark):
-        """fit_method='exact' trains via the integer Lloyd and probes
-        normally; with nprobe == nlist the result must equal the exact
-        brute-force top-k (the oracle-verifiable configuration)."""
-        from pyspark_datacol_diff_spark.operators.similarity import (
-            cosine_topk,
-            ivf_topk,
-        )
-
-        corpus = self._corpus(spark, n=50, dim=8)
-        queries = corpus.filter("vec_id % 10 = 0").select(
-            F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
-        )
-        got = {
-            (r["qid"], r["neighbor_id"])
-            for r in ivf_topk(
-                corpus, queries, 3, nlist=4, nprobe=4,
-                fit_method="exact", max_iter=2,
-            ).collect()
-        }
-        exact = {
-            (r["qid"], r["neighbor_id"])
-            for r in cosine_topk(corpus, queries, 3).collect()
-        }
-        assert got == exact
 
 
 class TestKmeansBucketedCosinePairs:
