@@ -21,4 +21,37 @@ reference. Two consequences every caller of such an operator inherits:
   CONSTRUCTING a returned frame and ACTING on it — releasing the blocks
   out from under an unexecuted plan fails the read (see
   ``free_persistent_rdds``' danger note).
+
+Exact-integer encoding contract: every operator emits exact integers at
+the fixed scales below and hashes through md5, so an external SQL
+engine (the DuckDB oracles) replays each result bit for bit. The scales
+are part of every result's meaning, not tuning knobs — a ``*_ppm``
+column is always parts per million — so they are defined once here and
+no operator takes them as a parameter.
 """
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+# Ratios, shares and probabilities: ``x_ppm = numerator * PPM DIV den``.
+PPM = 1_000_000
+
+# Embedding quantum: a vector element enters exact-integer math as
+# ``floor(double(x) * EMBED_QUANT)``.
+EMBED_QUANT = 1_000_000
+
+# Commutative content digests are a DECIMAL(38,0) sum of 60-bit md5
+# hashes, reduced mod DIGEST_MODULUS.
+DIGEST_MODULUS = 10**18
+
+
+def md5_int32(s: Column) -> Column:
+    """32-bit integer from the first 8 hex digits of ``md5(s)`` (DuckDB:
+    ``('0x' || substr(md5(s), 1, 8))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
+
+
+def md5_int60(s: Column) -> Column:
+    """60-bit integer from the first 15 hex digits of ``md5(s)`` (DuckDB:
+    ``('0x' || substr(md5(s), 1, 15))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")

@@ -59,6 +59,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import PPM
+
 
 def _free_ckpt(df: DataFrame) -> None:
     """Release the block set behind a ``localCheckpoint``-ed frame.
@@ -377,7 +379,6 @@ def pagerank_exact(
     iterations: int = 3,
     damping_num: int = 85,
     damping_den: int = 100,
-    scale: int = 1_000_000,
     seed_pred=None,
     weight_col: str | None = None,
     symmetric: bool = False,
@@ -385,9 +386,9 @@ def pagerank_exact(
     """Fixed-iteration PageRank in SCALED INTEGER arithmetic over a
     directed edge list — the authority score for link graphs (document
     citation/link dedup prioritization, crawl frontier ordering). Ranks
-    are longs in units of ``1/scale``; each round every node sends
-    ``rank div out_degree`` (integer division) to each out-neighbor
-    and receives ``(scale * (damping_den - damping_num)) div
+    are longs in units of ``1/PPM`` (every node starts at ``PPM``); each
+    round every node sends ``rank div out_degree`` (integer division) to
+    each out-neighbor and receives ``(PPM * (damping_den - damping_num)) div
     damping_den + (damping_num * incoming_sum) div damping_den``.
 
     Integer arithmetic makes the result deterministic: float per-node
@@ -397,10 +398,8 @@ def pagerank_exact(
     the ranks are bit-for-bit identical across partitionings and
     engines: the same unrolled iterations in ANSI SQL reproduce them
     hash-exactly. The cost is quantization — each hop truncates up to
-    ``out_degree - 1 + damping_den - 1`` rank units, so with the
-    default ``scale`` of 1e6 the result tracks the float recursion to
-    ~1e-6 relative error per hop; raise ``scale`` for deeper iteration
-    counts.
+    ``out_degree - 1 + damping_den - 1`` rank units, so the result
+    tracks the float recursion to ~1e-6 relative error per hop.
 
     Dangling nodes (no out-edges) keep receiving mass but their own
     mass is DISCARDED each round — the classic simplified Spark
@@ -426,7 +425,7 @@ def pagerank_exact(
     similarity scores (pre-quantized to ints), link multiplicities.
     Weights must be POSITIVE integers (a plan-side guard raises on
     NULL/non-positive); overflow bound tightens to ``max_rank *
-    max_weight < 2^63`` — at default scale, weights into the tens of
+    max_weight < 2^63`` — weights into the tens of
     thousands on million-node graphs.
 
     ``symmetric=True`` asserts that every edge appears in both
@@ -449,8 +448,8 @@ def pagerank_exact(
     calls) was 2.54 / 6.06 s checkpointing every round, 1.92 / 5.50 s
     every 3rd round, and 3.25 / 11.73 s checkpointing only the last.
     Overflow bound: ``damping_num * total_mass`` must fit in int64,
-    i.e. ``node_count * scale * damping_num < 2^63`` — at the default
-    scale that is ~10^11 nodes, far past any dedup pair graph.
+    i.e. ``node_count * PPM * damping_num < 2^63`` — ~10^11 nodes, far
+    past any dedup pair graph.
 
     Returns ``(node, rank)`` with ``rank`` long — one row per node
     appearing anywhere in the edge list.
@@ -462,11 +461,11 @@ def pagerank_exact(
             f"need 0 < damping_num < damping_den, got "
             f"{damping_num}/{damping_den}"
         )
-    if scale < damping_den:
+    if PPM < damping_den:
         raise ValueError(
-            f"scale must be >= damping_den, got {scale} < {damping_den}"
+            f"damping_den must be <= PPM ({PPM}), got {damping_den}"
         )
-    reset = (scale * (damping_den - damping_num)) // damping_den
+    reset = (PPM * (damping_den - damping_num)) // damping_den
     cols = [F.col(src_col).alias("src"), F.col(dst_col).alias("dst")]
     if weight_col is not None:
         # a non-positive, NULL, or fractional weight breaks the
@@ -541,7 +540,7 @@ def pagerank_exact(
                 F.lit(0).cast("long").alias("c"),
                 F.lit(True).alias("__in_base"),
             )
-            ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
+            ranks = nodes.withColumn("rank", F.lit(PPM).cast("long"))
             reset_expr = f"{reset}L"
         else:
             seeded = nodes.withColumn("__seed", seed_pred(F.col("node")))
@@ -552,7 +551,7 @@ def pagerank_exact(
             )
             ranks = seeded.select(
                 "node",
-                F.when(F.col("__seed"), F.lit(scale))
+                F.when(F.col("__seed"), F.lit(PPM))
                 .otherwise(F.lit(0))
                 .cast("long")
                 .alias("rank"),
@@ -1050,12 +1049,11 @@ def resource_allocation_candidates(
     dst_col: str = "dst",
     k: int = 5,
     max_degree: int | None = 100,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """LINK PREDICTION by the RESOURCE-ALLOCATION index (Zhou, Lü &
     Zhang, Eur. Phys. J. B 2009) in EXACT integer ppm: for every
     non-adjacent pair sharing neighbors, score
-    ``sum over shared neighbors w of (ppm_scale DIV deg(w))`` — the
+    ``sum over shared neighbors w of (PPM DIV deg(w))`` — the
     degree-discounted refinement of plain common-neighbor counting
     (a shared hub says far less than a shared rare neighbor; RA and
     its log-discounted cousin Adamic-Adar dominate raw counts on
@@ -1106,7 +1104,7 @@ def resource_allocation_candidates(
     )
     hubs = hubs.select(
         "n",
-        F.expr(f"{ppm_scale}L DIV size(ns_full)").alias("w_ppm"),
+        F.expr(f"{PPM}L DIV size(ns_full)").alias("w_ppm"),
         sliced.alias("ns"),
     )
     hubs = hubs.repartition(
@@ -1172,7 +1170,6 @@ def edge_structural_similarity(
     src_col: str = "src",
     dst_col: str = "dst",
     max_degree: int | None = 100,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """STRUCTURAL SIMILARITY of every EXISTING edge — open-neighborhood
     Jaccard ``|N(u) inter N(v)| / |N(u) union N(v)|`` in exact integer
@@ -1199,7 +1196,7 @@ def edge_structural_similarity(
     relation — bridges are the interesting rows.
 
     Returns ``(p1, p2, common_cnt, deg1, deg2, jaccard_ppm)`` with
-    p1 < p2; ``jaccard_ppm = common_cnt * ppm_scale DIV
+    p1 < p2; ``jaccard_ppm = common_cnt * PPM DIV
     (deg1 + deg2 - common_cnt)`` (truncating, denominator >= 2 for any
     existing edge so never zero).
 
@@ -1273,7 +1270,7 @@ def edge_structural_similarity(
         "deg1",
         "deg2",
         F.expr(
-            f"common_cnt * {ppm_scale}L DIV (deg1 + deg2 - common_cnt)"
+            f"common_cnt * {PPM}L DIV (deg1 + deg2 - common_cnt)"
         ).alias("jaccard_ppm"),
     )
 
@@ -1375,7 +1372,6 @@ def cluster_purity(
     node_col: str = "node",
     comp_col: str = "comp",
     label_col: str = "label",
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-cluster LABEL PURITY in exact integer ppm — the standard
     external clustering-quality check (majority-label fraction), here
@@ -1390,7 +1386,7 @@ def cluster_purity(
     — never a window over members, never a collect. Majority TIES
     resolve to the count (purity is about the max count, not which
     label holds it), so the output is deterministic without a
-    tie-break rule. ``purity_ppm = majority_n * ppm_scale DIV size``
+    tie-break rule. ``purity_ppm = majority_n * PPM DIV size``
     truncates exactly the way DuckDB ``//`` does.
 
     Returns ``(comp, size, majority_n, purity_ppm)``. Nodes missing
@@ -1418,20 +1414,18 @@ def cluster_purity(
         "comp",
         "size",
         "majority_n",
-        F.expr(f"majority_n * {ppm_scale}L DIV size").alias("purity_ppm"),
+        F.expr(f"majority_n * {PPM}L DIV size").alias("purity_ppm"),
     )
 
 
 def local_clustering(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b",
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-node LOCAL CLUSTERING COEFFICIENT in exact integer ppm —
     Watts-Strogatz ``2 * triangles / (deg * (deg - 1))``, the
     tight-community-vs-chain-noise signal one normalization past raw
     triangle counts: a node whose neighbors all know each other scores
-    ppm_scale, a pure hub scores 0.
+    PPM, a pure hub scores 0.
 
     Composes :func:`triangle_counts` (degree-ordered orientation — the
     Suri-Vassilvitskii bound on wedge work) with one degree aggregate
@@ -1475,7 +1469,7 @@ def local_clustering(
             "degree",
             F.coalesce("n_tri", F.lit(0)).alias("n_tri"),
             F.expr(
-                f"coalesce(n_tri, 0) * 2 * {ppm_scale}L "
+                f"coalesce(n_tri, 0) * 2 * {PPM}L "
                 f"DIV (degree * (degree - 1))"
             ).alias("lcc_ppm"),
         )

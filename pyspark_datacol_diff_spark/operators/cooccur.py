@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import PPM
+
 
 def cooccurrence_stats(
     df: DataFrame,
@@ -245,14 +247,13 @@ def association_rules(
     *,
     min_count: int = 2,
     cap: int | None = None,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """ASSOCIATION RULES from the basket-pair relation, scored in
     exact integers: every surviving pair (a, b) emits both directed
-    rules with ``confidence_ppm = n_ab * ppm_scale DIV n_ante``
+    rules with ``confidence_ppm = n_ab * PPM DIV n_ante``
     (P(consequent | antecedent), truncating) and
-    ``lift_ppm = n_ab * n_groups * ppm_scale DIV (n_ante * n_cons)``
-    (confidence over the consequent's base rate; > ppm_scale means
+    ``lift_ppm = n_ab * n_groups * PPM DIV (n_ante * n_cons)``
+    (confidence over the consequent's base rate; > PPM means
     positive association) — the market-basket recommendation score
     with none of float normalization's engine drift. Lift's
     numerator/denominator are computed in DECIMAL(38,0) (128-bit) so
@@ -310,12 +311,12 @@ def association_rules(
         )
         .crossJoin(F.broadcast(totals))
     )
-    conf = F.expr(f"n_ab * {ppm_scale}L DIV n_ante")
+    conf = F.expr(f"n_ab * {PPM}L DIV n_ante")
     # DECIMAL(38,0) DIV truncates the 128-bit quotient exactly (same
     # semantics as DuckDB HUGEINT //) — NOT decimal `/`, whose
     # scale-rounded quotient can round x.9999995 up before a floor
     lift = F.expr(
-        f"CAST(n_ab AS DECIMAL(38,0)) * n_groups * {ppm_scale} DIV "
+        f"CAST(n_ab AS DECIMAL(38,0)) * n_groups * {PPM} DIV "
         "(CAST(n_ante AS DECIMAL(38,0)) * n_cons)"
     )
     return scored.select(

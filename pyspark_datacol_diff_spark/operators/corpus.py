@@ -27,6 +27,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import PPM, md5_int32
 from .text import token_count, tokens
 
 # Portable PII patterns: kept to the regex subset with identical meaning
@@ -386,7 +387,7 @@ def pack_sequences(
     integers, engine-exact for cross-engine replay.
     """
     keyed = F.coalesce(F.col(id_col).cast("string"), F.lit("__null_key__"))
-    h = F.conv(F.substring(F.md5(keyed), 1, 8), 16, 10).cast("long")
+    h = md5_int32(keyed)
     staged = df.select(
         F.col(id_col),
         token_count(F.col(text_col)).alias("n_tokens"),
@@ -740,7 +741,7 @@ def type_token_ratio(
         )
         .withColumn(
             "ttr_ppm",
-            F.expr("n_types * CAST(1000000 AS BIGINT) DIV n_tokens"),
+            F.expr(f"n_types * CAST({PPM} AS BIGINT) DIV n_tokens"),
         )
     )
 
@@ -752,15 +753,14 @@ def skipgram_pairs(
     window: int = 2,
     min_count: int = 2,
     lowercase: bool = True,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Windowed token CO-OCCURRENCE with exact-integer PMI lift — the
     word2vec-equivalent skip-gram statistic (Levy & Goldberg, NeurIPS
     2014 showed SGNS factorizes exactly this matrix): every ORDERED
     token pair (a before b, gap <= ``window``) is counted, marginals
     are a's source-count and b's target-count over the SAME pair
-    population, and ``lift_ppm = n_ab * n_pairs * ppm_scale DIV
-    (n_a * n_b)`` (PMI's argument scaled to ppm — > ppm_scale means
+    population, and ``lift_ppm = n_ab * n_pairs * PPM DIV
+    (n_a * n_b)`` (PMI's argument scaled to ppm — > PPM means
     positively associated; take ``ln`` client-side for literal PMI).
     Collocation extraction, phrase-table seeding, and PPMI embedding
     features all read from this one relation.
@@ -832,7 +832,7 @@ def skipgram_pairs(
             "n_a",
             "n_b",
             F.expr(
-                f"CAST(CAST(n_ab AS DECIMAL(38,0)) * n_pairs * {ppm_scale} "
+                f"CAST(CAST(n_ab AS DECIMAL(38,0)) * n_pairs * {PPM} "
                 f"DIV (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)"
             ).alias("lift_ppm"),
         )
@@ -992,11 +992,10 @@ def doc_keywords(
     k: int = 3,
     min_tf: int = 1,
     lowercase: bool = True,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-document KEYWORD EXTRACTION by exact-integer TF-IDF rank —
     the top ``k`` terms that are frequent IN the doc and rare ACROSS
-    the corpus: ``score = tf * (n_docs * ppm_scale DIV df)`` (term
+    the corpus: ``score = tf * (n_docs * PPM DIV df)`` (term
     frequency times an integer-rendered idf), ties broken by ascending
     term so the selection replays bit-for-bit. The tagging /
     routing / index-summarization primitive at doc grain — the
@@ -1012,7 +1011,7 @@ def doc_keywords(
     partitions — each window sees one doc's distinct terms, never the
     corpus).
 
-    ``idf_ppm = n_docs * ppm_scale DIV df`` runs in DECIMAL(38,0) and
+    ``idf_ppm = n_docs * PPM DIV df`` runs in DECIMAL(38,0) and
     the score is emitted BIGINT after the integer DIV — both exactly
     DuckDB ``//`` semantics.
 
@@ -1049,7 +1048,7 @@ def doc_keywords(
             "tf",
             "df_docs",
             F.expr(
-                f"CAST(tf * (CAST(__n AS DECIMAL(38,0)) * {ppm_scale} "
+                f"CAST(tf * (CAST(__n AS DECIMAL(38,0)) * {PPM} "
                 f"DIV df_docs) AS BIGINT)"
             ).alias("score"),
         )
@@ -1066,8 +1065,6 @@ def hapax_census(
     df: DataFrame,
     group_cols,
     text_col: str = "text",
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group HAPAX LEGOMENA census — vocabulary-richness one rung
     past TTR: how much of each group's vocabulary occurs exactly once?
@@ -1082,7 +1079,7 @@ def hapax_census(
     corpus-sized exchange — vocabulary-bounded after the combine), then
     a group-grain reduce: n_tokens = sum of counts, n_types = count,
     n_hapax = count of count-1 types, hapax_share_ppm = n_hapax *
-    ppm_scale DIV n_types (exact integer, floor == trunc: both
+    PPM DIV n_types (exact integer, floor == trunc: both
     non-negative).
 
     Returns ``(*group_cols, n_tokens, n_types, n_hapax,
@@ -1110,7 +1107,7 @@ def hapax_census(
         "n_tokens",
         "n_types",
         "n_hapax",
-        F.expr(f"n_hapax * {ppm_scale}L DIV n_types").alias(
+        F.expr(f"n_hapax * {PPM}L DIV n_types").alias(
             "hapax_share_ppm"
         ),
     )
@@ -1120,8 +1117,6 @@ def simpson_diversity(
     df: DataFrame,
     group_cols,
     text_col: str = "text",
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group GINI-SIMPSON vocabulary diversity in exact ppm —
     ``1 - sum(p_i^2)`` over the group's token distribution: the
@@ -1130,8 +1125,8 @@ def simpson_diversity(
     distribution's tail, Simpson its head): a feed whose diversity
     collapses is one template repeated; entropy needs logs no
     cross-engine arithmetic replays, Simpson is one exact integer
-    division per group — ``ppm_scale - (sum(c_i^2) * ppm_scale) DIV
-    n^2`` in DECIMAL(38,0) (exact while ``n^2 * ppm_scale < 10^38``),
+    division per group — ``PPM - (sum(c_i^2) * PPM) DIV
+    n^2`` in DECIMAL(38,0) (exact while ``n^2 * PPM < 10^38``),
     emitted through the checked BIGINT cast.
 
     Same token convention and (group, token)-grain single-exchange
@@ -1167,7 +1162,7 @@ def simpson_diversity(
         "n_types",
         checked_long(
             F.expr(
-                f"{ppm_scale} - (__sq * {ppm_scale}) DIV "
+                f"{PPM} - (__sq * {PPM}) DIV "
                 "(CAST(n_tokens AS DECIMAL(38,0)) * n_tokens)"
             ),
             context="simpson_ppm",
@@ -1179,8 +1174,6 @@ def tv_distance_vs_rest(
     df: DataFrame,
     group_col: str,
     text_col: str = "text",
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group TOTAL-VARIATION DISTANCE between the group's token
     distribution and the REST of the corpus, in exact scaled ppm — the
@@ -1192,11 +1185,11 @@ def tv_distance_vs_rest(
 
         num_g = sum over tokens IN g of |c*(T - T_g) - (tot_t - c)*T_g|
                 + T_g * (T - A_g)        # mass of tokens absent from g
-        tv_ppm = num_g * ppm_scale DIV (2 * T_g * (T - T_g))
+        tv_ppm = num_g * PPM DIV (2 * T_g * (T - T_g))
 
     where ``A_g = sum over tokens in g of tot_t``. All quantities
     non-negative, so DIV truncation agrees across engines; arithmetic
-    is DECIMAL(38,0) and exact while ``T^2 * ppm_scale < 10^38``
+    is DECIMAL(38,0) and exact while ``T^2 * PPM < 10^38``
     (T up to ~3e15 tokens); emit is the checked BIGINT cast.
 
     Same token convention as :func:`hapax_census`. Scale shape: ONE
@@ -1264,7 +1257,7 @@ def tv_distance_vs_rest(
             F.col("__g").alias(group_col),
             F.col("__tg").alias("n_tokens"),
             checked_long(
-                F.expr(f"(__num * {ppm_scale}) DIV __den"),
+                F.expr(f"(__num * {PPM}) DIV __den"),
                 context="tv_distance tv_ppm",
             ).alias("tv_ppm"),
         )

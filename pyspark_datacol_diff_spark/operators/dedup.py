@@ -6,17 +6,20 @@ inside WholeStageCodegen and scale with executor count.
 
 Scale design notes (100 TB):
 
-- exact dedup: one hash-aggregate shuffle on the content key. Use
-  ``xxhash64``/``md5`` of the content instead of the content itself as the
-  shuffle key when rows are wide — the shuffle then moves 8-32 bytes per
-  row, not documents.
+- exact dedup: one hash-aggregate shuffle on the content key. Use the
+  ``md5`` of the content (:func:`content_fingerprint`) instead of the
+  content itself as the shuffle key when rows are wide — the shuffle then
+  moves 32 bytes per row, not documents.
 - near-dup (shingle/Jaccard): the classic shingle→invert→pair-count
   pipeline. The inverted index join is the shuffle; hot shingles create
   quadratic pair blowup, so ``max_df`` prunes shingles whose document
   frequency exceeds a cap (standard MinHash/LSH practice — a shingle in
   10k docs contributes ~5·10^7 pairs and no discriminative signal).
-- MinHash-LSH: banding over minhash signatures via ``pyspark.ml.feature
-  .MinHashLSH``; candidate pairs verified with exact Jaccard.
+- MinHash / SimHash: every gram hash is the portable
+  :func:`~pyspark_datacol_diff_spark.operators.md5_int32`, so an external
+  SQL engine replays signatures, fingerprints and band joins bit for bit.
+  ``minhash_lsh_pairs`` is the pyspark.ml ``MinHashLSH`` alternative
+  (engine-internal hash seeds).
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ import logging
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from . import md5_int32
 
 logger = logging.getLogger("pyspark_datacol_diff_spark.dedup")
 
@@ -75,21 +80,12 @@ def content_fingerprint(text: Column | str, num_tokens: int | None = None) -> Co
 
     md5 is chosen deliberately: byte-identical in every engine (the DuckDB
     oracle uses the same function), unlike xxhash64 whose seeds differ.
-    For pure-Spark pipelines ``xxhash64`` is cheaper — see
-    ``fast_fingerprint``.
     """
     t = F.col(text) if isinstance(text, str) else text
     toks = F.split(t, r"\s+")
     if num_tokens is not None:
         toks = F.slice(toks, 1, num_tokens)
     return F.md5(F.concat_ws(" ", toks))
-
-
-def fast_fingerprint(text: Column | str) -> Column:
-    """xxhash64 content key — the at-scale choice (8-byte shuffle key,
-    ~10x faster than md5; Spark-side only, no cross-engine parity)."""
-    t = F.col(text) if isinstance(text, str) else text
-    return F.xxhash64(t)
 
 
 # ---------------------------------------------------------------------------
@@ -234,15 +230,15 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 64,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """k-permutation MinHash signatures as an array<bigint> column.
 
     Shingle SET (``array_distinct`` — duplicate shingles cannot change
-    a min, so they are dropped before any per-gram work) -> 32-bit gram
-    hash -> k universal hashes ``(a_i * h + b_i) mod p`` -> ONE hash
-    aggregate with k mins (same single-exchange shape as
-    simhash_fingerprints). The exchange is doc-sized, not gram-sized:
+    a min, so they are dropped before any per-gram work) -> 32-bit md5
+    gram hash (``md5_int32``) -> k universal hashes
+    ``(a_i * h + b_i) mod p`` -> ONE hash aggregate with k mins (same
+    single-exchange shape as simhash_fingerprints). The exchange is
+    doc-sized, not gram-sized:
     partial aggregation folds each partition's grams into one
     64-min row per document map-side, so only (doc_id, 64 longs) rows
     move. Measured AGAINST the tempting zero-shuffle alternative
@@ -251,12 +247,8 @@ def minhash_signatures(
     SLOWER at sf0.1 — the exchange it removes was already negligible,
     the allocation it adds is not. Coefficients are
     seeded-deterministic; a_i < 2^30 and h < 2^32 keep the product
-    inside signed-64 range (no overflow).
-
-    ``hash_fn``: 'xxhash64' (default — fastest, JVM-internal) or 'md5'
-    (first 8 hex chars -> int; ~same cost class, engine-portable, so an
-    external SQL engine can replay the exact signatures for
-    verification).
+    inside signed-64 range (no overflow). Every step is engine-portable,
+    so an external SQL engine replays the exact signatures.
 
     Returns (doc_id, sig: array<bigint>). Docs with < n tokens drop out.
     """
@@ -268,13 +260,7 @@ def minhash_signatures(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("g"),
     )
-    if hash_fn == "xxhash64":
-        h32 = F.xxhash64("g").bitwiseAND(F.lit((1 << 32) - 1))
-    elif hash_fn == "md5":
-        h32 = F.conv(F.substring(F.md5("g"), 1, 8), 16, 10).cast("long")
-    else:
-        raise ValueError(f"hash_fn must be xxhash64|md5, got {hash_fn!r}")
-    hashed = grams.select("doc_id", h32.alias("h"))
+    hashed = grams.select("doc_id", md5_int32(F.col("g")).alias("h"))
     mins = hashed.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(_MH_PRIME)).alias(
@@ -298,7 +284,6 @@ def minhash_near_dup_pairs(
     bands: int = 16,
     jaccard_threshold: float = 0.5,
     seed: int = 42,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Near-dup pairs via MinHash banding (Leskovec et al., MMDS ch.3),
     pure DataFrame ops — the at-scale alternative to pyspark.ml's
@@ -308,40 +293,36 @@ def minhash_near_dup_pairs(
     num_hashes) sits at or below ``jaccard_threshold``: 16 bands x 4 rows
     targets ~0.5; use 32 x 2 for thresholds near 0.2-0.3.
 
-    Signature -> ``bands`` band keys (hash of each signature slice)
-    -> explode -> self-join on (band, key) -> distinct candidate pairs
-    -> verify with the signature-agreement Jaccard estimate. Signatures
-    ride along through the band explode (bands x sig copies) — cheaper
-    than two join-backs until signatures get long; switch to join-back
-    beyond ~256 hashes.
+    Signature -> ``bands`` band keys (md5 of each signature slice's
+    comma-joined decimal string) -> explode -> self-join on (band, key)
+    -> distinct candidate pairs -> verify with the signature-agreement
+    Jaccard estimate. Signatures ride along through the band explode
+    (bands x sig copies) — cheaper than two join-backs until signatures
+    get long; switch to join-back beyond ~256 hashes.
 
-    ``hash_fn`` selects BOTH the gram hash and the band key: 'xxhash64'
-    (default, 8-byte band shuffle key) or 'md5' (engine-portable — an
-    external SQL engine replaying md5 sees the identical candidate set,
-    since any band-key collision is byte-identical across engines).
+    Both the gram hash and the band key are md5, so an external SQL
+    engine replaying md5 sees the identical candidate set (any band-key
+    collision is byte-identical across engines).
 
     Returns (id_a, id_b, est_jaccard).
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
-        df, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed,
-        hash_fn=hash_fn,
+        df, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed
     )
-
-    def _bkey(sl: Column) -> Column:
-        if hash_fn == "md5":
-            return F.md5(
-                F.concat_ws(",", F.transform(sl, lambda x: x.cast("string")))
-            )
-        return F.xxhash64(sl)
-
     band_entries = F.array(
         *[
             F.struct(
                 F.lit(j).alias("band"),
-                _bkey(F.slice("sig", j * rows_per_band + 1, rows_per_band)).alias(
-                    "bkey"
-                ),
+                F.md5(
+                    F.concat_ws(
+                        ",",
+                        F.transform(
+                            F.slice("sig", j * rows_per_band + 1, rows_per_band),
+                            lambda x: x.cast("string"),
+                        ),
+                    )
+                ).alias("bkey"),
             )
             for j in range(bands)
         ]
@@ -466,8 +447,11 @@ def minhash_lsh_pairs(
 
 
 # ---------------------------------------------------------------------------
-# SimHash (64-bit, xxhash64-based) — near-dup by Hamming distance
+# SimHash (32-bit, md5-based) — near-dup by Hamming distance
 # ---------------------------------------------------------------------------
+
+_SIMHASH_BITS = 32  # md5_int32 carries 32 bits of hash entropy
+
 
 def simhash_fingerprints(
     df: DataFrame,
@@ -475,22 +459,17 @@ def simhash_fingerprints(
     text_col: str,
     *,
     n: int = 3,
-    bits: int = 64,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """``bits``-wide SimHash per document (Charikar 2002): per shingle
-    hash, per-bit majority vote across shingles, sign -> fingerprint bit.
+    """32-bit SimHash per document (Charikar 2002): per shingle hash
+    (``md5_int32``), per-bit majority vote across shingles, sign ->
+    fingerprint bit. Every fingerprint bit carries hash entropy, and an
+    external SQL engine replays the fingerprints exactly.
 
-    Shape: explode shingles -> ONE hash aggregate with ``bits`` conditional
+    Shape: explode shingles -> ONE hash aggregate with 32 conditional
     sums (map-side partial, one shuffle keyed by doc id) -> pack bits in a
     final projection. A pure-Column fold formulation (aggregate() per bit)
-    re-walks the shingle array 64x per row and is ~50x slower — measured,
-    not guessed.
-
-    ``hash_fn``: 'xxhash64' (default, 64-bit, JVM-internal) or 'md5'
-    (first 8 hex chars -> 32-bit, engine-portable — pass ``bits=32`` so
-    every fingerprint bit carries hash entropy; an external SQL engine
-    can then replay fingerprints exactly).
+    re-walks the shingle array once per bit per row and is ~50x slower —
+    measured, not guessed.
 
     Docs with fewer than ``n`` tokens have no shingles and produce no row.
     Returns (doc_id, fp).
@@ -501,23 +480,16 @@ def simhash_fingerprints(
         F.col(id_col).alias("doc_id"),
         F.explode(word_ngrams(text_col, n)).alias("g"),
     )
-    if hash_fn == "xxhash64":
-        gram_hash = F.xxhash64("g")
-    elif hash_fn == "md5":
-        gram_hash = F.conv(F.substring(F.md5("g"), 1, 8), 16, 10).cast("long")
-    else:
-        raise ValueError(f"hash_fn must be xxhash64|md5, got {hash_fn!r}")
-    h = grams.select("doc_id", gram_hash.alias("h"))
-    # bit 63 via arithmetic shiftright still yields (h>>63)&1 == sign bit
+    h = grams.select("doc_id", md5_int32(F.col("g")).alias("h"))
     votes = h.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("m"),
         *[
             F.sum(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1))).alias(f"b{i}")
-            for i in range(bits)
+            for i in range(_SIMHASH_BITS)
         ],
     )
     fp = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(_SIMHASH_BITS):
         fp = fp.bitwiseOR(
             F.when(
                 F.col(f"b{i}") * 2 >= F.col("m"),
@@ -533,6 +505,70 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(x)
 
 
+def _hamming_band_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    sig_col: str,
+    width: int,
+    band_bits: int,
+    max_hamming: int,
+) -> DataFrame:
+    """Pigeonhole band join over ``width``-bit signatures, shared by
+    :func:`simhash_near_dups` and ``similarity.srp_near_dup_pairs``:
+    cut each signature into ``width // band_bits`` chunks with band key
+    ``i:(sig >>> i*band_bits) & mask``; pairs sharing ANY band are
+    candidates (self-join on the key, ``id_a < id_b``, distinct),
+    verified by full Hamming distance <= ``max_hamming``.
+
+    ``sigs`` feeds both join sides, so it is persisted here and the
+    upstream signature pipeline runs once, not twice. One shuffle on the
+    band key, one on the pair key. Returns ``(id_a, id_b, hamming)``.
+    """
+    from pyspark.storagelevel import StorageLevel
+
+    if band_bits < 1 or width % band_bits != 0:
+        raise ValueError(
+            f"band_bits must divide the {width}-bit signature, got "
+            f"{band_bits}/{width}"
+        )
+    sigs = sigs.persist(StorageLevel.MEMORY_AND_DISK)
+    bands = sigs.select(
+        F.col(id_col).alias("doc_id"),
+        sig_col,
+        F.explode(
+            F.array(
+                *[
+                    F.concat_ws(
+                        ":",
+                        F.lit(i),
+                        F.shiftrightunsigned(F.col(sig_col), i * band_bits)
+                        .bitwiseAND(F.lit((1 << band_bits) - 1)),
+                    )
+                    for i in range(width // band_bits)
+                ]
+            )
+        ).alias("band"),
+    )
+    sig_a, sig_b = f"{sig_col}_a", f"{sig_col}_b"
+    a = bands.select(
+        F.col("doc_id").alias("id_a"), F.col(sig_col).alias(sig_a), "band"
+    )
+    b = bands.select(
+        F.col("doc_id").alias("id_b"), F.col(sig_col).alias(sig_b), "band"
+    )
+    cands = (
+        a.join(b, "band")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", sig_a, sig_b)
+        .distinct()
+    )
+    return (
+        cands.withColumn("hamming", hamming64(F.col(sig_a), F.col(sig_b)))
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id_a", "id_b", "hamming")
+    )
+
+
 def simhash_near_dups(
     df: DataFrame,
     id_col: str,
@@ -541,63 +577,20 @@ def simhash_near_dups(
     n: int = 3,
     max_hamming: int = 8,
     band_bits: int = 16,
-    bits: int = 64,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: band the ``bits``-wide fingerprint into
-    bits/band_bits chunks; pairs sharing any band are candidates (standard
+    """Near-dup pairs by SimHash: band the 32-bit fingerprint into
+    32/band_bits chunks; pairs sharing any band are candidates (standard
     pigeonhole blocking), verified by full Hamming distance.
+    ``band_bits`` must divide 32 (``ValueError`` otherwise).
 
-    The band key is a decimal string of the chunk — already
-    engine-portable; with ``hash_fn='md5'`` and ``bits=32`` the whole
-    pipeline (fingerprints included) replays bit-exactly in external SQL
-    engines.
+    The band key is a decimal string of the chunk, so the whole pipeline
+    (fingerprints included) replays bit-exactly in external SQL engines.
 
-    One shuffle on the band key, one on the pair key. Returns
-    ``(id_a, id_b, hamming)``.
+    Returns ``(id_a, id_b, hamming)``.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    # both sides of the band self-join consume the fingerprints; cache
-    # the tiny (doc_id, fp) relation so the shingle -> per-bit-vote
-    # shuffle pipeline runs once, not twice
-    fp = simhash_fingerprints(
-        df, id_col, text_col, n=n, bits=bits, hash_fn=hash_fn
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    nbands = bits // band_bits
-    bands = fp.select(
-        "doc_id",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        F.lit(i),
-                        F.shiftrightunsigned(F.col("fp"), i * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1)),
-                    )
-                    for i in range(nbands)
-                ]
-            )
-        ).alias("band"),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a"), "band"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"), F.col("fp").alias("fp_b"), "band"
-    )
-    cands = (
-        a.join(b, "band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "fp_a", "fp_b")
-        .distinct()
-    )
-    return (
-        cands.withColumn("hamming", hamming64(F.col("fp_a"), F.col("fp_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    fp = simhash_fingerprints(df, id_col, text_col, n=n)
+    return _hamming_band_pairs(
+        fp, "doc_id", "fp", _SIMHASH_BITS, band_bits, max_hamming
     )
 
 

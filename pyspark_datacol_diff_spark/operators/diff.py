@@ -59,6 +59,7 @@ from pyspark.sql.types import (
 )
 
 from ..errors import InvalidArgumentError, PrimaryKeyError, SchemaMismatchError
+from . import DIGEST_MODULUS, md5_int60
 
 # Run-metadata log sink (reference utils.py:11-31). Logs only plan-side
 # facts — the reference's count-for-logging actions were extra Spark jobs.
@@ -722,8 +723,6 @@ def profile_table(
 def table_digest(
     df: DataFrame,
     cols: Sequence[str] | None = None,
-    *,
-    modulus: int = 10**18,
 ) -> DataFrame:
     """Order-independent per-column content digest — the cheap pre-diff
     equality gate. Two snapshots with equal digests are (at checksum
@@ -733,7 +732,7 @@ def table_digest(
     "digest every night, diff on digest mismatch".
 
     Per column: ``n_values`` (non-null count), ``n_nulls``, and
-    ``digest`` = sum of a 60-bit md5 value hash, mod ``modulus`` —
+    ``digest`` = sum of a 60-bit md5 value hash, mod ``DIGEST_MODULUS`` —
     commutative, so the result is partitioning- and order-independent,
     and md5 keeps it engine-portable (replayable in any SQL engine for
     cross-system migration checks). The sum accumulates in
@@ -753,7 +752,7 @@ def table_digest(
     stacked = df.select(
         *[F.col(c).cast("string").alias(c) for c in names]
     ).unpivot([], names, "col_name", "v")
-    h = _md5_int60(F.col("v"))
+    h = md5_int60(F.col("v"))
     return (
         stacked.groupBy("col_name")
         .agg(
@@ -763,7 +762,7 @@ def table_digest(
                 F.coalesce(
                     F.sum(h.cast("decimal(38,0)")), F.lit(0).cast("decimal(38,0)")
                 ),
-                F.lit(modulus).cast("decimal(38,0)"),
+                F.lit(DIGEST_MODULUS).cast("decimal(38,0)"),
             )
             .cast("long")
             .alias("digest"),
@@ -784,13 +783,6 @@ def digests_equal(s1: DataFrame, s2: DataFrame, cols: Sequence[str]) -> bool:
 
 _NULL_SENTINEL = "\x00"
 _SEP = "\x01"
-
-
-def _md5_int60(s: Column) -> Column:
-    """60-bit integer from the first 15 hex digits of md5 — the
-    engine-portable value hash shared with :func:`table_digest` (DuckDB:
-    ``('0x' || substr(md5(s), 1, 15))::BIGINT``)."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
 
 
 def _row_str(cols: Sequence[str]) -> Column:
@@ -814,7 +806,6 @@ def digest_tree(
     *,
     fanout: int = 16,
     levels: int = 2,
-    modulus: int = 10**18,
 ) -> DataFrame:
     """Merkle-style digest tree — :func:`table_digest`'s structured
     sibling: instead of one digest per column, a ``levels``-deep tree of
@@ -832,7 +823,7 @@ def digest_tree(
     (value edits must flag the bucket holding that key, not migrate the
     row to a different leaf), and contributes a 60-bit md5 hash of its
     full canonical row string to the leaf's commutative digest (sum mod
-    ``modulus`` in DECIMAL(38,0) — order/partitioning independent,
+    ``DIGEST_MODULUS`` in DECIMAL(38,0) — order/partitioning independent,
     engine-portable). Parents aggregate child digests with the same
     modular sum (``(a mod m + b mod m) mod m = (a+b) mod m``), so any
     row change propagates to the root.
@@ -871,13 +862,13 @@ def digest_tree(
         c for c in df.columns if c not in set(pk_cols)
     ]
     n_leaves = fanout**levels
-    mod_dec = F.lit(modulus).cast("decimal(38,0)")
+    mod_dec = F.lit(DIGEST_MODULUS).cast("decimal(38,0)")
     leaves = (
         df.select(
-            F.pmod(_md5_int60(_row_str(pk_cols)), F.lit(n_leaves)).alias(
+            F.pmod(md5_int60(_row_str(pk_cols)), F.lit(n_leaves)).alias(
                 "node"
             ),
-            _md5_int60(_row_str(list(pk_cols) + vals)).alias("__h"),
+            md5_int60(_row_str(list(pk_cols) + vals)).alias("__h"),
         )
         .groupBy("node")
         .agg(
@@ -921,7 +912,6 @@ def digest_tree_diff(
     *,
     fanout: int = 16,
     levels: int = 2,
-    modulus: int = 10**18,
 ) -> DataFrame:
     """Compare two snapshots' digest trees: one row per tree node
     present on either side, with both sides' counts/digests and a
@@ -931,12 +921,8 @@ def digest_tree_diff(
     else is verified-identical without a row-level join. Each side is
     one scan; the comparison join touches only tree-grain rows.
     """
-    t1 = digest_tree(
-        s1, pk_cols, value_cols, fanout=fanout, levels=levels, modulus=modulus
-    )
-    t2 = digest_tree(
-        s2, pk_cols, value_cols, fanout=fanout, levels=levels, modulus=modulus
-    )
+    t1 = digest_tree(s1, pk_cols, value_cols, fanout=fanout, levels=levels)
+    t2 = digest_tree(s2, pk_cols, value_cols, fanout=fanout, levels=levels)
     a = t1.select(
         "level", "node",
         F.col("n_rows").alias("n1"), F.col("digest").alias("d1"),
@@ -1056,7 +1042,7 @@ def scoped_diff(
         # which is semantically a superset (extra NODIFF confirmations
         # from the minority-clean buckets, same difference rows)
         return diff(s1, s2, list(pk_cols))
-    bucket = F.pmod(_md5_int60(_row_str(pk_cols)), F.lit(n_leaves))
+    bucket = F.pmod(md5_int60(_row_str(pk_cols)), F.lit(n_leaves))
     if len(dirty) <= _SCOPED_ISIN_CAP:
         # constant-folded literal, pruned map-side before any exchange
         keep = bucket.isin(dirty) if dirty else F.lit(False)

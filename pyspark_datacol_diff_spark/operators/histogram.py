@@ -23,6 +23,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import PPM
+
 
 def histogram(
     df: DataFrame,
@@ -261,12 +263,11 @@ def quantile_rank(
     group_cols: Sequence[str],
     value_col: str,
     *,
-    ppm_scale: int = 1_000_000,
     out_col: str = "pr_ppm",
 ) -> DataFrame:
     """Per-group EXACT QUANTILE-RANK feature transform — each row's
     value rewritten as its empirical percentile within its group, in
-    integer ppm: ``pr_ppm = (strictly-smaller row count) * ppm_scale
+    integer ppm: ``pr_ppm = (strictly-smaller row count) * PPM
     DIV (n_group - 1)`` — exactly SQL ``PERCENT_RANK()`` with min-rank
     tie semantics ((rank-1)/(n-1)), rendered without a float so the
     transform replays bit-for-bit cross-engine. The quantile
@@ -310,7 +311,7 @@ def quantile_rank(
     ranked = pre.join(tot, gc).select(
         *gc,
         value_col,
-        F.when(F.col("__n") > 1, F.expr(f"__lt * {ppm_scale}L DIV (__n - 1)"))
+        F.when(F.col("__n") > 1, F.expr(f"__lt * {PPM}L DIV (__n - 1)"))
         .otherwise(F.lit(0))
         .cast("long")
         .alias(out_col),
@@ -323,7 +324,6 @@ def top_share(
     key_cols,
     *,
     top_k: int,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """CONCENTRATION census — what share of all rows do the ``top_k``
     heaviest keys hold? The Lorenz-curve point behind "1% of users
@@ -337,7 +337,7 @@ def top_share(
     the cut replays deterministically), one scalar total, and a
     cross-join of two tiny relations. Returns one row
     ``(n_keys, n_rows, top_k, top_rows, share_ppm)`` where
-    ``share_ppm = top_rows * ppm_scale DIV n_rows``.
+    ``share_ppm = top_rows * PPM DIV n_rows``.
 
     Reference scope note: no aggregation beyond the diff summary exists
     in the reference (SURVEY.md §2.7); north-star extension surface.
@@ -369,6 +369,6 @@ def top_share(
         ),
         F.expr(
             "CASE WHEN coalesce(n_rows, 0L) = 0L THEN 0L "
-            f"ELSE coalesce(top_rows, 0L) * {ppm_scale}L DIV n_rows END"
+            f"ELSE coalesce(top_rows, 0L) * {PPM}L DIV n_rows END"
         ).alias("share_ppm"),
     )

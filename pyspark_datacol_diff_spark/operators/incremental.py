@@ -248,7 +248,6 @@ def time_weighted_avg(
     keys: list[str],
     tiebreak_col: str,
     grain: str = "hour",
-    scale: int = 4,
 ) -> DataFrame:
     """Per-key time-weighted average per ``grain`` cell — the TWAP /
     metering aggregate: each observation's value HOLDS from its
@@ -258,21 +257,21 @@ def time_weighted_avg(
     cells it crosses. A plain AVG weights by observation COUNT and
     overstates bursty periods; this weights by holding TIME.
 
-    EXACT-INTEGER contract: values quantize to ``10^scale`` units via
-    DECIMAL (the repo's cents convention), durations are epoch
+    EXACT-INTEGER contract: values quantize to ``10^-4`` units via
+    DECIMAL(18,4) (the repo's cents convention), durations are epoch
     MICROSECOND differences (int64), so the per-cell moments are exact
-    integer sums: ``num_e{scale}us = sum(value_q * overlap_us)``,
+    integer sums: ``num_e4us = sum(value_q * overlap_us)``,
     ``covered_us = sum(overlap_us)``, and ``twap_q = num div covered``
     (truncated). Magnitude bound: ``max|value_q| * grain_us`` must fit
-    int64 — at scale 4 and hour grain that is values into the 10^8
-    range. ``tiebreak_col`` (a unique column, e.g. the event id) makes
-    the within-timestamp order deterministic: simultaneous
-    observations produce zero-length segments in EVERY engine instead
-    of engine-dependent lead() order.
+    int64 — at hour grain that is values into the 10^8 range.
+    ``tiebreak_col`` (a unique column, e.g. the event id) makes the
+    within-timestamp order deterministic: simultaneous observations
+    produce zero-length segments in EVERY engine instead of
+    engine-dependent lead() order.
 
-    Returns ``(*keys, grain_start, covered_us, num_e{scale}us,
-    twap_q)`` for every grain cell a segment touches. The last
-    observation per key extrapolates nowhere (no segment after it).
+    Returns ``(*keys, grain_start, covered_us, num_e4us, twap_q)`` for
+    every grain cell a segment touches. The last observation per key
+    extrapolates nowhere (no segment after it).
 
     Scale shape: one keyed window (lead), one explode bounded by the
     calendar cells each segment crosses, one map-side-combined
@@ -289,8 +288,8 @@ def time_weighted_avg(
     step_us = 3_600_000_000 if grain == "hour" else 86_400_000_000
     w = Window.partitionBy(*keys).orderBy(ts_col, tiebreak_col)
     vq = (
-        F.col(value_col).cast(f"decimal(18,{scale})")
-        * F.lit(10 ** scale).cast(f"decimal(18,0)")
+        F.col(value_col).cast("decimal(18,4)")
+        * F.lit(10_000).cast("decimal(18,0)")
     ).cast("long")
     seg = (
         df.select(
@@ -317,7 +316,7 @@ def time_weighted_avg(
     overlap = F.least(
         F.unix_micros("__nxt"), F.unix_micros("grain_start") + F.lit(step_us)
     ) - F.greatest(F.unix_micros("__ts"), F.unix_micros("grain_start"))
-    num_col = f"num_e{scale}us"
+    num_col = "num_e4us"
     return (
         cells.withColumn("__us", overlap)
         .filter(F.col("__us") > 0)
@@ -343,13 +342,12 @@ def decayed_sum(
     value_col: str,
     *,
     anchor_sql: str | None = None,
-    value_scale: int = 100,
     max_shift: int = 62,
     out_col: str = "decayed_q",
 ) -> DataFrame:
     """Per-key EXPONENTIALLY TIME-DECAYED sum with half-life = 1 day,
     computed in EXACT integer arithmetic: each event contributes
-    ``round(value * value_scale) >> age_days`` — a literal ARITHMETIC
+    ``round(value * 100) >> age_days`` — a literal ARITHMETIC
     right shift (``shiftright`` in Spark, ``>>`` in DuckDB), i.e. FLOOR
     division by 2^age. The convention is pinned deliberately (r08):
     truncating integer division (Spark ``DIV`` / DuckDB ``//``) rounds
@@ -372,7 +370,7 @@ def decayed_sum(
     keeping the shift in int64 range; negative ages (events after the
     anchor) clamp to 0 — full weight.
 
-    Quantization: bround (round-half-even) at ``value_scale``. NOTE:
+    Quantization: bround (round-half-even) to cents. NOTE:
     DuckDB's round() on DOUBLE rounds half AWAY from zero (round(-0.5)
     = -1 where bround gives 0) — caught by the r08 negative-value
     boundary rows — so a replaying oracle must spell out half-even
@@ -382,8 +380,7 @@ def decayed_sum(
     Scale shape: one map-side-combined aggregate over ``keys``; the
     default anchor is one scalar aggregate broadcast to every row.
 
-    Returns ``(*keys, n_events, decayed_q)`` — ``decayed_q`` in units
-    of ``1/value_scale``.
+    Returns ``(*keys, n_events, decayed_q)`` — ``decayed_q`` in cents.
     """
     if anchor_sql is None:
         anc = df.agg(F.max(F.to_date(ts_col)).alias("__anchor"))
@@ -397,7 +394,7 @@ def decayed_sum(
         f"{max_shift}), 0)"
     )
     contrib = F.expr(
-        f"shiftright(CAST(bround({value_col} * {value_scale}) AS BIGINT), "
+        f"shiftright(CAST(bround({value_col} * 100) AS BIGINT), "
         f"CAST({age} AS INT))"
     )
     return (

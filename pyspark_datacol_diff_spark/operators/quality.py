@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import PPM
+
 
 def check_rules(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
     """Evaluate every rule over one scan; returns one row per rule:
@@ -185,7 +187,6 @@ def benford_first_digit(
     value_col: str,
     *,
     group_by: list[str] | None = None,
-    scale: int = 4,
 ) -> DataFrame:
     """First-significant-digit distribution of a positive numeric column
     — the Benford's-law audit (fraud/synthetic-data screening: organic
@@ -196,14 +197,14 @@ def benford_first_digit(
 
     EXACT-INTEGER contract: the first digit comes from the DECIMAL
     rendering, never from float logs — ``v -> CAST(v AS
-    DECIMAL(18,scale)) * 10^scale`` is an exact integer in any engine,
+    DECIMAL(18,4)) * 10^4`` is an exact integer in any engine,
     and the leading character of an integer's decimal string is
     engine-independent (float ``log10``/`pow`` paths differ in last
     ulps across engines; strings of ints never do). Non-positive and
     NULL values are excluded (they have no first significant digit).
 
     Returns one row per (group, digit): ``(*group_by, digit, n,
-    ppm)`` where ``ppm = n * 1_000_000 div group_total`` (truncated
+    ppm)`` where ``ppm = n * PPM div group_total`` (truncated
     integer division — exact, comparable against Benford's 301030 /
     176091 / ... expectations without emitting a float). A NULL group
     key is a group like any other (the :func:`winsorize` convention) —
@@ -218,8 +219,8 @@ def benford_first_digit(
     """
     gb = list(group_by or [])
     e = (
-        F.col(value_col).cast(f"decimal(18,{scale})")
-        * F.lit(10 ** scale).cast("decimal(18,0)")
+        F.col(value_col).cast("decimal(18,4)")
+        * F.lit(10_000).cast("decimal(18,0)")
     ).cast("long")
     digits = (
         df.select(*gb, e.alias("__e"))
@@ -235,7 +236,7 @@ def benford_first_digit(
     )
     # SQL DIV: exact int64 division (a float `/` then cast could round
     # a just-below-integer quotient up before truncation)
-    ppm = F.expr("(n * CAST(1000000 AS BIGINT)) DIV __tot").alias("ppm")
+    ppm = F.expr(f"(n * CAST({PPM} AS BIGINT)) DIV __tot").alias("ppm")
     if gb:
         from pyspark.sql import Window
 
@@ -265,7 +266,7 @@ def gini_impurity(
     Shannon entropy measures the same thing through float logarithms
     whose low bits differ across engines; Gini is a polynomial in the
     counts, so it stays in integer arithmetic end to end:
-    ``gini_ppm = (T^2 - sum(c_i^2)) * 1_000_000 div T^2`` with
+    ``gini_ppm = (T^2 - sum(c_i^2)) * PPM div T^2`` with
     per-label counts ``c_i`` and group total ``T`` — exact in any
     64-bit engine while ``T < ~3e9`` per group (T^2 must fit int64;
     per-entity behavioral groups are orders of magnitude below that).
@@ -289,7 +290,7 @@ def gini_impurity(
         "n",
         "sum_sq",
         F.expr(
-            "((n * n - sum_sq) * CAST(1000000 AS BIGINT)) DIV (n * n)"
+            f"((n * n - sum_sq) * CAST({PPM} AS BIGINT)) DIV (n * n)"
         ).alias(ppm_col),
     )
 
@@ -362,7 +363,6 @@ def ks_statistic(
     group_a,
     group_b,
     *,
-    ppm_scale: int = 1_000_000,
     bucket_width: int = 1000,
 ) -> DataFrame:
     """EXACT two-sample KOLMOGOROV-SMIRNOV statistic between two
@@ -371,7 +371,7 @@ def ks_statistic(
     comparison (:func:`distribution_drift` sees only the bins you
     chose; KS is the sup-norm over EVERY threshold):
     ``ks_ppm = max over distinct values v of
-    |cum_a(v) * n_b - cum_b(v) * n_a| * ppm_scale DIV (n_a * n_b)``
+    |cum_a(v) * n_b - cum_b(v) * n_a| * PPM DIV (n_a * n_b)``
     — the cross-multiplied integer rendering of
     ``max |F_a(v) - F_b(v)|``, so the statistic replays bit-for-bit
     with no float CDF. Compare against the usual
@@ -475,7 +475,7 @@ def ks_statistic(
             "n_b",
             F.expr(
                 f"abs(CAST(cum_a AS DECIMAL(38,0)) * n_b - "
-                f"CAST(cum_b AS DECIMAL(38,0)) * n_a) * {ppm_scale} "
+                f"CAST(cum_b AS DECIMAL(38,0)) * n_a) * {PPM} "
                 f"DIV (CAST(n_a AS DECIMAL(38,0)) * n_b)"
             ).cast("long").alias("d_ppm"),
         )
@@ -560,7 +560,6 @@ def spearman_ppm(
     y_col: str,
     *,
     tiebreak_cols,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group SPEARMAN rank correlation in exact scaled ppm — the
     monotone-trend detector ("is engagement drifting with time?", "does
@@ -573,7 +572,7 @@ def spearman_ppm(
     integers, and the tiebreak makes the permutation deterministic so
     any SQL engine replays it bit-for-bit). With ranks a permutation of
     1..n, rho = 1 - 6*sum(d^2)/(n(n^2-1)); emitted as
-    ``rho_ppm = ppm_scale - (6*ppm_scale*sum_d2) DIV (n(n^2-1))``, all
+    ``rho_ppm = PPM - (6*PPM*sum_d2) DIV (n(n^2-1))``, all
     DECIMAL(38,0) (n^3 passes int64 around n ~ 2M; sum_d2*6e6 long
     before that), quotient >= 0 so floor == trunc in both engines;
     emitted through the checked BIGINT cast. Groups with n < 2 are
@@ -620,8 +619,8 @@ def spearman_ppm(
         ).alias("__sd2"),
     )
     rho = F.expr(
-        f"CAST({ppm_scale} AS DECIMAL(38,0)) - "
-        f"(CAST(6 AS DECIMAL(38,0)) * {ppm_scale} * __sd2) DIV "
+        f"CAST({PPM} AS DECIMAL(38,0)) - "
+        f"(CAST(6 AS DECIMAL(38,0)) * {PPM} * __sd2) DIV "
         "(CAST(n AS DECIMAL(38,0)) * n * n - n)"
     )
     return (
@@ -638,8 +637,6 @@ def chi2_ppm(
     df: DataFrame,
     row_col: str,
     col_col: str,
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Pearson CHI-SQUARE independence statistic over a contingency of
     two categorical columns, in exact scaled ppm — the drift detector
@@ -653,11 +650,11 @@ def chi2_ppm(
     col-category cross join, which the naive (O-E)^2/E form needs and
     which is a cartesian blow-up at vocabulary-sized categories).
     CONTRACT: each observed cell contributes the truncated integer
-    ``O^2 * n * ppm_scale DIV (R * C)`` and the statistic is the sum of
-    those minus ``n * ppm_scale`` — per-cell truncation, deterministic
-    and bit-replayable, bias bounded by n_cells/ppm_scale. Arithmetic
+    ``O^2 * n * PPM DIV (R * C)`` and the statistic is the sum of
+    those minus ``n * PPM`` — per-cell truncation, deterministic
+    and bit-replayable, bias bounded by n_cells/PPM. Arithmetic
     is DECIMAL(38,0) end-to-end; exactness requires
-    ``n^3 * ppm_scale < 10^38`` (n up to ~10^10 rows — document or
+    ``n^3 * PPM < 10^38`` (n up to ~10^10 rows — document or
     sample beyond), and the emit goes through the checked BIGINT cast.
 
     Scale shape: one (row, col)-grain map-side-combined count (the only
@@ -683,10 +680,10 @@ def chi2_ppm(
         rm["__r"]
     ).join(cm, obs["__c"].eqNullSafe(cm["__c"]), "inner").drop(cm["__c"])
     raw_cell = F.expr(
-        f"CAST(__o AS DECIMAL(38,0)) * __o * __n * {ppm_scale} "
+        f"CAST(__o AS DECIMAL(38,0)) * __o * __n * {PPM} "
         "DIV (CAST(__rn AS DECIMAL(38,0)) * __cn)"
     )
-    # overflow guard: past the documented n^3*ppm_scale < 10^38 bound,
+    # overflow guard: past the documented n^3*PPM < 10^38 bound,
     # non-ANSI Spark turns the DECIMAL(38,0) product into a silent NULL
     # that F.sum would skip — a silently WRONG statistic. __o/__n/__rn/
     # __cn are counts (never null), so a NULL term IS overflow: fail
@@ -695,8 +692,7 @@ def chi2_ppm(
         F.raise_error(
             F.lit(
                 "chi2_ppm: per-cell DECIMAL(38,0) overflow — "
-                f"n^3 * ppm_scale ({ppm_scale}) exceeds 10^38; sample "
-                "the input or reduce ppm_scale"
+                f"n^3 * PPM ({PPM}) exceeds 10^38; sample the input"
             )
         )
     )
@@ -719,7 +715,7 @@ def chi2_ppm(
             (F.col("n_row_cats") - 1) * (F.col("n_col_cats") - 1)
         ).alias("dof"),
         checked_long(
-            F.expr(f"__sum_t - CAST(__n AS DECIMAL(38,0)) * {ppm_scale}"),
+            F.expr(f"__sum_t - CAST(__n AS DECIMAL(38,0)) * {PPM}"),
             context="chi2_ppm",
         ).alias("chi2_ppm"),
     )
@@ -733,7 +729,6 @@ def mann_whitney_u2(
     group_b,
     *,
     bucket_width: int = 1000,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """EXACT two-sample MANN-WHITNEY U (Wilcoxon rank-sum) between two
     groups' value distributions, in DOUBLED integer units — the
@@ -858,7 +853,7 @@ def mann_whitney_u2(
         # value (ties half-weighted); u2_a >= 0 so DIV floor == trunc
         checked_long(
             F.expr(
-                f"(__u2a * {ppm_scale}) "
+                f"(__u2a * {PPM}) "
                 f"DIV (CAST(2 AS DECIMAL(38,0)) * {na} * {nb})"
             ),
             context="mann_whitney auc_ppm",
@@ -874,7 +869,6 @@ def autocorr_ppm(
     *,
     lag: int = 1,
     tiebreak_cols,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group lag-``k`` AUTOCORRELATION in exact scaled ppm — the
     serial-dependence detector ("do high-value events cluster in
@@ -887,13 +881,13 @@ def autocorr_ppm(
     products are scaled by ``n``:
     ``num = sum over the n-k lagged pairs of (n*x_t - S)*(n*x_{t-k} - S)``
     ``den = sum over ALL n rows of (n*x_t - S)^2``
-    ``acf_ppm = sign(num) * (|num| * ppm_scale DIV den)`` — the
+    ``acf_ppm = sign(num) * (|num| * PPM DIV den)`` — the
     sign-split keeps DIV truncation toward zero identical in Spark and
     DuckDB (their negative-quotient conventions differ). This is the
     standard ACF estimator (denominator over the full series) up to
     exact integer truncation; order is the TOTAL order ``(order_col,
     *tiebreak_cols)`` so the lag pairing is deterministic. All
-    DECIMAL(38,0); exactness needs ``n^3 * x_max^2 * ppm_scale <
+    DECIMAL(38,0); exactness needs ``n^3 * x_max^2 * PPM <
     10^38`` (cents-scale values pass to n ~ 10^8; sample or pre-
     aggregate beyond). Groups with ``n <= lag`` or zero variance
     (``den = 0``) are dropped — the statistic is undefined there and
@@ -971,9 +965,9 @@ def autocorr_ppm(
         checked_long(
             F.when(
                 F.col("__num") >= 0,
-                F.expr(f"(__num * {ppm_scale}) DIV __den"),
+                F.expr(f"(__num * {PPM}) DIV __den"),
             ).otherwise(
-                -F.expr(f"((- __num) * {ppm_scale}) DIV __den")
+                -F.expr(f"((- __num) * {PPM}) DIV __den")
             ),
             context="autocorr acf_ppm",
         ).alias("acf_ppm"),
@@ -984,8 +978,6 @@ def cohens_kappa_ppm(
     df: DataFrame,
     rater_a_col: str,
     rater_b_col: str,
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """COHEN'S KAPPA chance-corrected agreement between two categorical
     columns, in exact scaled ppm — the label-quality gate for "does the
@@ -994,13 +986,13 @@ def cohens_kappa_ppm(
 
     CONTRACT: ``kappa = (n*sum_diag - sum_k rm_k*cm_k) / (n^2 -
     sum_k rm_k*cm_k)`` in cross-multiplied integers, emitted as
-    ``kappa_ppm = sign(num) * (|num| * ppm_scale DIV den)`` (sign-split
+    ``kappa_ppm = sign(num) * (|num| * PPM DIV den)`` (sign-split
     DIV, truncation toward zero in both engines). NULL is a REAL
     category (chi2_ppm's convention) and the diagonal is null-safe:
     a (NULL, NULL) pair counts as agreement. Like chi2, only OBSERVED
     (a, b) cells materialize — the marginal product sum needs only the
     per-category marginals, never a category cross join. All
-    DECIMAL(38,0); exact for ``n^2 * ppm_scale < 10^38``. Raises
+    DECIMAL(38,0); exact for ``n^2 * PPM < 10^38``. Raises
     ``ValueError`` via execution-time guard when den = 0 (both raters
     constant — kappa undefined; Spark NULL vs DuckDB error would
     diverge).
@@ -1068,9 +1060,9 @@ def cohens_kappa_ppm(
         checked_long(
             F.when(
                 F.col("__num") >= 0,
-                F.expr(f"(__num * {ppm_scale}) DIV __den"),
+                F.expr(f"(__num * {PPM}) DIV __den"),
             ).otherwise(
-                -F.expr(f"((- __num) * {ppm_scale}) DIV __den")
+                -F.expr(f"((- __num) * {PPM}) DIV __den")
             ),
             context="cohens_kappa kappa_ppm",
         ).alias("kappa_ppm"),
@@ -1222,7 +1214,6 @@ def gini_concentration_ppm(
     value_col: str,
     *,
     tiebreak_cols,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group GINI CONCENTRATION coefficient (the Lorenz-curve
     income Gini) of a NON-NEGATIVE value column, in exact ppm — "is
@@ -1233,10 +1224,10 @@ def gini_concentration_ppm(
     CONTRACT: with values sorted ascending (total order via
     ``(value, *tiebreak_cols)`` — permutations among tied values leave
     the statistic unchanged, the tiebreak just pins the plan),
-    ``gini_ppm = (2*sum(i*x_i) - (n+1)*S) * ppm_scale DIV (n*S)``
+    ``gini_ppm = (2*sum(i*x_i) - (n+1)*S) * PPM DIV (n*S)``
     where ``S = sum(x)`` — the standard rank formula, all
     cross-multiplied DECIMAL(38,0) (exact while ``n^2 * x_max *
-    ppm_scale < 10^38``), numerator >= 0 so DIV floor == trunc; emit
+    PPM < 10^38``), numerator >= 0 so DIV floor == trunc; emit
     through the checked BIGINT cast. NEGATIVE values raise at
     execution (the Lorenz curve is undefined below zero — a silent
     wrong number otherwise); groups with ``S = 0`` (all zeros) are
@@ -1302,7 +1293,7 @@ def gini_concentration_ppm(
             "sum_value",
             checked_long(
                 F.expr(
-                    f"(__num * {ppm_scale}) "
+                    f"(__num * {PPM}) "
                     "DIV (CAST(n AS DECIMAL(38,0)) * sum_value)"
                 ),
                 context="gini_concentration gini_ppm",
@@ -1317,7 +1308,6 @@ def fano_factor_ppm(
     ts_col: str,
     *,
     bucket: str = "hour",
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Per-group FANO FACTOR (index of dispersion, variance/mean) of
     per-``bucket`` event counts, in exact ppm — the burstiness gate: a
@@ -1332,10 +1322,10 @@ def fano_factor_ppm(
     contract; this one is the occupied-bucket dispersion, documented
     and replayed identically by the oracle). With per-bucket counts
     ``c_j``, ``m`` buckets, ``C = sum(c)``:
-    ``fano_ppm = (m*sum(c^2) - C^2) * ppm_scale DIV (m*C)`` — the
+    ``fano_ppm = (m*sum(c^2) - C^2) * PPM DIV (m*C)`` — the
     population variance/mean cross-multiplied (numerator >= 0 by
     Cauchy-Schwarz, DIV floor == trunc). DECIMAL(38,0); exact while
-    ``m * C^2 * ppm_scale < 10^38``. Groups need ``m >= 1`` and
+    ``m * C^2 * PPM < 10^38``. Groups need ``m >= 1`` and
     ``C > 0`` by construction (occupied buckets only).
 
     Scale shape: one (group, bucket)-grain map-combined count — the
@@ -1367,7 +1357,7 @@ def fano_factor_ppm(
             F.expr(
                 "((CAST(n_buckets AS DECIMAL(38,0)) * __sq "
                 "- CAST(n_events AS DECIMAL(38,0)) * n_events) "
-                f"* {ppm_scale}) "
+                f"* {PPM}) "
                 "DIV (CAST(n_buckets AS DECIMAL(38,0)) * n_events)"
             ),
             context="fano_factor fano_ppm",

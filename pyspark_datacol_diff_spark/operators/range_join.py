@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import PPM
+
 _BIN = "__rj_bin"
 _LTS = "__rj_lts"
 _RTS = "__rj_rts"
@@ -210,7 +212,6 @@ def position_attribution(
     ts_col: str,
     *,
     gap_minutes: int = 30,
-    total_ppm: int = 1_000_000,
     first_pct: int = 40,
     last_pct: int = 40,
     tiebreak_cols: list[str] | None = None,
@@ -219,16 +220,16 @@ def position_attribution(
     """POSITION-BASED (U-shaped) multi-touch attribution in exact
     integer ppm: sessionize each key's touch stream by ``gap_minutes``
     inactivity (the gaps-and-islands shape — lag + cumulative break
-    sum, one keyed sort), then allocate each session's ``total_ppm``
+    sum, one keyed sort), then allocate each session's ``PPM``
     credit 40/20/40 (first / middles / last, configurable) with every
     division exact and every remainder accounted:
 
-    - 1 touch: all of ``total_ppm``;
+    - 1 touch: all of ``PPM``;
     - 2 touches: an exact half each (+ remainder to the first);
     - n >= 3: ``first_pct``% to the first, ``last_pct``% to the last,
       the middle pool split by integer division over the n-2 middles
       with the pool's remainder going to the FIRST touch — so every
-      session's credits sum to exactly ``total_ppm`` (property-
+      session's credits sum to exactly ``PPM`` (property-
       testable, engine-replayable; float attribution never adds up).
 
     Scale shape: one keyed window sort (partition by key) computes the
@@ -271,18 +272,18 @@ def position_attribution(
         .withColumn("n_touches", F.count(F.lit(1)).over(wsz))
         .drop("__brk")
     )
-    first_c = total_ppm * first_pct // 100
-    last_c = total_ppm * last_pct // 100
-    mid_pool = total_ppm - first_c - last_c
-    half = total_ppm // 2
+    first_c = PPM * first_pct // 100
+    last_c = PPM * last_pct // 100
+    mid_pool = PPM - first_c - last_c
+    half = PPM // 2
     n = F.col("n_touches")
     mid_each = F.expr(f"{mid_pool}L DIV (n_touches - 2)")
     mid_rem = F.lit(mid_pool) - mid_each * (n - 2)
     credit = (
-        F.when(n == 1, F.lit(total_ppm))
+        F.when(n == 1, F.lit(PPM))
         .when(
             n == 2,
-            F.when(F.col("touch_no") == 1, total_ppm - half).otherwise(
+            F.when(F.col("touch_no") == 1, PPM - half).otherwise(
                 half
             ),
         )
@@ -302,12 +303,11 @@ def transition_counts(
     state_col: str,
     *,
     tiebreak_cols: list[str] | None = None,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """First-order MARKOV TRANSITION matrix over per-key event streams
     in exact integers: each key's events are ordered once, consecutive
     (from_state -> to_state) steps are counted, and each row carries
-    the transition probability as ``n * ppm_scale DIV n_from`` (row-
+    the transition probability as ``n * PPM DIV n_from`` (row-
     normalized, truncating — the engine-replayable rendering of the
     empirical transition matrix a journey-analysis / next-event-
     prediction pipeline wants; float normalization never sums
@@ -350,7 +350,7 @@ def transition_counts(
             "from_state",
             "to_state",
             "n",
-            F.expr(f"n * {ppm_scale}L DIV __n_from").alias("p_ppm"),
+            F.expr(f"n * {PPM}L DIV __n_from").alias("p_ppm"),
         )
     )
 
@@ -359,14 +359,12 @@ def seasonality_lift(
     df: DataFrame,
     ts_col: str,
     type_col: str,
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """HOUR-OF-WEEK SEASONALITY per category in exact integer ppm —
     the observed-over-expected lift a capacity planner or anomaly
     baseline wants: for each (category, hour-of-week) cell,
-    ``lift_ppm = n_cell * n_total * ppm_scale DIV (n_type * n_hour)``
-    (> ppm_scale: the category over-indexes in that hour relative to
+    ``lift_ppm = n_cell * n_total * PPM DIV (n_type * n_hour)``
+    (> PPM: the category over-indexes in that hour relative to
     BOTH its own volume and the hour's overall traffic — the
     independence-null lift, same exact-rational rendering as the PMI
     and association-rule scores; 128-bit DECIMAL(38,0) arithmetic so
@@ -396,7 +394,7 @@ def seasonality_lift(
         .groupBy("type", "how")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return seasonality_lift_from_cells(cells, ppm_scale=ppm_scale)
+    return seasonality_lift_from_cells(cells)
 
 
 def hour_of_week(ts_col: str) -> Column:
@@ -412,8 +410,6 @@ def hour_of_week(ts_col: str) -> Column:
 
 def seasonality_lift_from_cells(
     cells: DataFrame,
-    *,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """The marginals-and-lift stage of :func:`seasonality_lift` over a
     pre-aggregated ``(type, how, n)`` cell relation — the entry point
@@ -433,7 +429,7 @@ def seasonality_lift_from_cells(
             "how",
             "n",
             F.expr(
-                f"CAST(CAST(n AS DECIMAL(38,0)) * __n_total * {ppm_scale} "
+                f"CAST(CAST(n AS DECIMAL(38,0)) * __n_total * {PPM} "
                 f"DIV (CAST(__n_type AS DECIMAL(38,0)) * __n_hour) AS BIGINT)"
             ).alias("lift_ppm"),
         )

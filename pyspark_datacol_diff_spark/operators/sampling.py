@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import md5_int32, md5_int60
+
 DEFAULT_BUCKETS = 10_000
 
 
@@ -32,7 +34,7 @@ def hash_bucket(key: Column | str, *, buckets: int = DEFAULT_BUCKETS) -> Column:
     null split keys — this makes them visible instead of scattered."""
     k = F.col(key) if isinstance(key, str) else key
     keyed = F.coalesce(k.cast("string"), F.lit("__null_key__"))
-    h = F.conv(F.substring(F.md5(keyed), 1, 8), 16, 10).cast("long")
+    h = md5_int32(keyed)
     return h % F.lit(buckets)
 
 
@@ -251,15 +253,7 @@ def weighted_hash_sample(
                 f"weighted_hash_sample: input must not carry reserved "
                 f"column {c!r}"
             )
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("long")
+    h = md5_int60(F.concat(F.lit(salt), F.col(id_col).cast("string")))
     w = F.col(weight_col).cast("long")
     guarded_w = F.when(w >= 1, w).otherwise(
         F.raise_error(

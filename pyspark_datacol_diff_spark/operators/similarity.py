@@ -19,6 +19,15 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import EMBED_QUANT
+
+
+def _quantize(x: Column) -> Column:
+    """The engine-wide exact embedding quantization of one element:
+    ``floor(double(x) * EMBED_QUANT)`` as BIGINT (floor is tie-free, and
+    float->double widening is IEEE-identical in Spark and DuckDB)."""
+    return F.floor(x.cast("double") * F.lit(float(EMBED_QUANT)))
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array columns, accumulated in double,
@@ -411,31 +420,26 @@ def dim_sums_exact(
     df: DataFrame,
     group_col: str,
     vec_col: str = "embedding",
-    *,
-    scale: int = 6,
 ) -> DataFrame:
     """Per-group per-dimension vector sums in EXACT integer space:
-    each element contributes ``floor(x * 10^scale)`` as a BIGINT, so the
-    aggregate is order-independent and bit-identical in any engine
-    (floor is tie-free, unlike round; float sums would drift by
-    partitioning). The group centroid is ``dim_sum / 10^scale / n_vecs``
-    to ``scale`` digits — plenty for centroid seeding/verification.
+    each element contributes ``floor(x * EMBED_QUANT)`` (1e6) as a
+    BIGINT, so the aggregate is order-independent and bit-identical in
+    any engine (floor is tie-free, unlike round; float sums would drift
+    by partitioning). The group centroid is ``dim_sum / 1e6 / n_vecs``
+    to 6 digits — plenty for centroid seeding/verification.
 
-    Returns ``(group_col, pos, dim_sum_e{scale}, n_vecs)`` in long form
+    Returns ``(group_col, pos, dim_sum_e6, n_vecs)`` in long form
     (one row per group x dimension). Plan shape: posexplode multiplies
     rows x dim BEFORE the aggregate, but map-side partial aggregation
     compresses each partition to (groups x dim) rows pre-shuffle — at
     100 TB the exchange carries group-count x dim x partitions rows,
     never corpus x dim.
     """
-    sum_col = f"dim_sum_e{scale}"
     exploded = df.select(
         F.col(group_col), F.posexplode(F.col(vec_col)).alias("pos", "__x")
     )
     return exploded.groupBy(group_col, "pos").agg(
-        F.sum(
-            F.floor(F.col("__x").cast("double") * F.lit(float(10**scale))).cast("long")
-        ).alias(sum_col),
+        F.sum(_quantize(F.col("__x")).cast("long")).alias("dim_sum_e6"),
         F.count(F.lit(1)).alias("n_vecs"),
     )
 
@@ -714,9 +718,9 @@ def quantize_scale(vec: Column) -> Column:
     return F.array_max(F.transform(vec, lambda v: F.abs(v.cast("double"))))
 
 
-def quantize_int8(vec: Column, scale: Column, *, bits: int = 8) -> Column:
-    """Symmetric scalar quantization of ``vec`` to ``±(2^(bits-1)-1)``
-    integer codes: ``q_i = floor(x_i / scale * qmax)``.
+def quantize_int8(vec: Column, scale: Column) -> Column:
+    """Symmetric scalar quantization of ``vec`` to ``±127`` integer
+    codes: ``q_i = floor(x_i / scale * 127)``.
 
     ``floor`` (not round) keeps the codes engine-portable: IEEE 754
     requires division and multiplication to be correctly rounded, so the
@@ -726,10 +730,9 @@ def quantize_int8(vec: Column, scale: Column, *, bits: int = 8) -> Column:
     float32, so a quantized corpus keeps 4x more vectors per executor —
     scan, cache, and shuffle all shrink accordingly.
     """
-    qmax = (1 << (bits - 1)) - 1
     zeros = F.transform(vec, lambda v: F.lit(0))
     q = F.transform(
-        vec, lambda v: F.floor(v.cast("double") / scale * qmax).cast("int")
+        vec, lambda v: F.floor(v.cast("double") / scale * 127).cast("int")
     )
     return F.when(scale == F.lit(0.0), zeros).otherwise(q)
 
@@ -755,7 +758,6 @@ def quantized_topk(
     vec_col: str = "embedding",
     query_id_col: str = "qid",
     query_vec_col: str = "qv",
-    bits: int = 8,
     exclude_self: bool = True,
 ) -> DataFrame:
     """Top-k maximum-inner-product search over int8-quantized vectors —
@@ -782,7 +784,7 @@ def quantized_topk(
     )
     c = c.select(
         id_col, "__sa",
-        quantize_int8(F.col(vec_col), F.col("__sa"), bits=bits).alias("__qa"),
+        quantize_int8(F.col(vec_col), F.col("__sa")).alias("__qa"),
     )
     q = queries.select(
         F.col(query_id_col),
@@ -791,7 +793,7 @@ def quantized_topk(
     )
     q = q.select(
         query_id_col, "__sb",
-        quantize_int8(F.col(query_vec_col), F.col("__sb"), bits=bits).alias("__qb"),
+        quantize_int8(F.col(query_vec_col), F.col("__sb")).alias("__qb"),
     )
     pairs = c.crossJoin(F.broadcast(q))
     if exclude_self:
@@ -1074,47 +1076,40 @@ def pq_topk_refined(
 def dim_stats_exact(
     df: DataFrame,
     vec_col: str = "embedding",
-    *,
-    scale: int = 6,
 ) -> DataFrame:
     """Per-dimension first AND second moments of an embedding column in
     EXACT integer space — the whitening/standardization precompute
     (mean = sum/n, variance = (n*sumsq - sum^2)/n^2, both derivable
     from the emitted integers with no cross-engine float drift). Same
     contribution rule as :func:`dim_sums_exact`: each element enters as
-    ``floor(x * 10^scale)`` BIGINT, so sums are order/partitioning
+    ``floor(x * EMBED_QUANT)`` BIGINT, so sums are order/partitioning
     independent and bit-identical in any engine.
 
-    Returns ``(pos, n_vecs, dim_sum_e{scale}, dim_sumsq_e{2*scale})``.
+    Returns ``(pos, n_vecs, dim_sum_e6, dim_sumsq_e12)``.
     Both the per-element square and the running sum are computed in
     DECIMAL (the LONG*LONG multiply would overflow first), and the
     exact integer is emitted as BIGINT — the OUTPUT domain bound: a
     squared-sum beyond 2^63 raises a loud ANSI CAST_OVERFLOW rather
-    than wrapping. For unit-scale embeddings at scale=6 a squared e6
-    contribution is ~1e12, leaving ~9e6 rows of headroom per dimension
-    times however small the elements are; data outside that envelope
-    needs a smaller ``scale``.
+    than wrapping. For unit-scale embeddings a squared e6 contribution
+    is ~1e12, leaving ~9e6 rows of headroom per dimension times however
+    small the elements are; data outside that envelope raises.
 
     Plan shape: identical to dim_sums_exact — posexplode inside the
     scan stage, one map-side-combined aggregate keyed by dimension; the
     exchange carries dim x partitions rows, never corpus x dim.
     """
-    sum_col = f"dim_sum_e{scale}"
-    sq_col = f"dim_sumsq_e{2 * scale}"
-    c = F.floor(F.col("__x").cast("double") * F.lit(float(10**scale))).cast(
-        "long"
-    )
+    c = _quantize(F.col("__x")).cast("long")
     exploded = df.select(F.posexplode(F.col(vec_col)).alias("pos", "__x"))
     return exploded.select("pos", c.alias("__c")).groupBy("pos").agg(
         F.count(F.lit(1)).alias("n_vecs"),
-        F.sum("__c").alias(sum_col),
+        F.sum("__c").alias("dim_sum_e6"),
         # the multiply itself must run in decimal: LONG * LONG overflows
         # (ANSI ARITHMETIC_OVERFLOW) for |c| >= 2^31.5, i.e. elements
-        # beyond ~3037 at scale=6, even when the product fits 38 digits
+        # beyond ~3037, even when the product fits 38 digits
         F.sum(
             F.col("__c").cast("decimal(19,0)")
             * F.col("__c").cast("decimal(19,0)")
-        ).cast("long").alias(sq_col),
+        ).cast("long").alias("dim_sumsq_e12"),
     )
 
 
@@ -1149,7 +1144,7 @@ def srp_signatures(
 ) -> DataFrame:
     """Sign-random-projection signature per vector (Charikar 2002, the
     cosine-LSH family): bit ``p`` of ``sig`` is ``[qv . h_p >= 0]``
-    where ``qv = floor(double(v) * 1e6)`` (the engine-wide exact
+    where ``qv = floor(double(v) * EMBED_QUANT)`` (the engine-wide exact
     embedding quantization, same contract as ``dim_sums_exact``) and
     ``h_p`` are :func:`srp_planes`. Two signatures' Hamming distance
     estimates angular distance (P[bit differs] = theta/pi) — the
@@ -1191,7 +1186,7 @@ def srp_signatures(
                     "impute upstream"
                 )
             v = np.array(list(pdf[vec_col]), dtype=np.float64)
-            qv = np.floor(v * 1_000_000.0).astype(np.int64)  # (batch, dim)
+            qv = np.floor(v * EMBED_QUANT).astype(np.int64)  # (batch, dim)
             bits = (qv @ H.T) >= 0  # exact int64 matmul, (batch, P)
             sig = (bits * weights).sum(axis=1, dtype=np.int64)
             yield pd.DataFrame({id_col: pdf[id_col], "sig": sig})
@@ -1226,51 +1221,11 @@ def srp_near_dup_pairs(
 
     Returns ``(id_a, id_b, hamming)``.
     """
-    from pyspark.storagelevel import StorageLevel
+    from .dedup import _hamming_band_pairs
 
-    from .dedup import hamming64
-
-    if num_planes % band_bits != 0:
-        raise ValueError(
-            f"band_bits must divide num_planes, got {band_bits}/{num_planes}"
-        )
-    sig = srp_signatures(
-        df, id_col, vec_col, dim=dim, num_planes=num_planes
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    nbands = num_planes // band_bits
-    bands = sig.select(
-        F.col(id_col).alias("doc_id"),
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.concat_ws(
-                        ":",
-                        F.lit(i),
-                        F.shiftrightunsigned(F.col("sig"), i * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1)),
-                    )
-                    for i in range(nbands)
-                ]
-            )
-        ).alias("band"),
-    )
-    a = bands.select(
-        F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"), "band"
-    )
-    b = bands.select(
-        F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"), "band"
-    )
-    cands = (
-        a.join(b, "band")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sig_a", "sig_b")
-        .distinct()
-    )
-    return (
-        cands.withColumn("hamming", hamming64(F.col("sig_a"), F.col("sig_b")))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    sig = srp_signatures(df, id_col, vec_col, dim=dim, num_planes=num_planes)
+    return _hamming_band_pairs(
+        sig, id_col, "sig", num_planes, band_bits, max_hamming
     )
 
 
@@ -1411,7 +1366,6 @@ def kmeans_exact_assign(
     vec_col: str = "embedding",
     nlist: int = 4,
     iterations: int = 2,
-    quant: int = 1_000_000,
     centroids_out: list | None = None,
     vector_out_col: str | None = None,
 ) -> DataFrame:
@@ -1424,9 +1378,9 @@ def kmeans_exact_assign(
     partitionings and engines, exactly like
     :func:`~..cluster.pagerank_exact` is for ranks:
 
-    - vectors quantize to ``floor(v * quant)`` longs (the SRP-family
-      convention — float→double widening is IEEE-identical in Spark
-      and DuckDB);
+    - vectors quantize to ``floor(v * EMBED_QUANT)`` longs (the
+      SRP-family convention — float→double widening is IEEE-identical
+      in Spark and DuckDB);
     - seeds are the ``nlist`` corpus vectors with the smallest
       ``md5(id)`` (hash-ordered, id tie-break — a deterministic random
       pick both engines compute identically), cell = seed order;
@@ -1441,8 +1395,8 @@ def kmeans_exact_assign(
     map-side-combined (cell, dim)-grain aggregate whose output is
     index-grain (nlist x dim rows ≤ KBs) — the only driver collect,
     bounded by construction like the MG sketch. Overflow: requires
-    ``dim * (2 * quant * max|v|)^2 < 2^63`` — at quant 1e6 and unit-
-    normalized embeddings that is dims into the tens of thousands.
+    ``dim * (2 * EMBED_QUANT * max|v|)^2 < 2^63`` — for unit-normalized
+    embeddings that is dims into the tens of thousands.
 
     Returns ``(id_col, cell)``; pass ``centroids_out=[]`` to also
     receive the final quantized centroid lists (the integer IVF probe
@@ -1461,9 +1415,7 @@ def kmeans_exact_assign(
         # null argmin) and desync from any oracle — fail loudly instead
         F.when(
             F.col(vec_col).isNotNull(),
-            F.transform(
-                F.col(vec_col), lambda x: F.floor(x * F.lit(float(quant)))
-            ),
+            F.transform(F.col(vec_col), _quantize),
         )
         .otherwise(
             F.raise_error(
@@ -1565,7 +1517,6 @@ def kmeans_bucketed_cosine_pairs(
     vec_col: str = "embedding",
     nlist: int = 4,
     iterations: int = 2,
-    quant: int = 1_000_000,
     sim_num: int = 2,
     sim_den: int = 5,
     engine: str = "gemm",
@@ -1586,7 +1537,7 @@ def kmeans_bucketed_cosine_pairs(
     the assignment scored: ``dot_q = sum(qa_i * qb_i)``,
     ``cos_q = dot_q / sqrt(na2 * nb2)``, thresholded WITHOUT sqrt or
     floats as ``dot_q >= 0 AND dot_q^2 * sim_den^2 >= sim_num^2 * na2
-    * nb2`` (dot_q can reach ~dim * quant^2 ~ 2^41; its square
+    * nb2`` (dot_q can reach ~dim * EMBED_QUANT^2 ~ 2^41; its square
     overflows int64, so the comparison runs in 128-bit-capable
     arithmetic). Zero-norm vectors (all components quantize to 0) have
     no cosine direction and are excluded from pairing — without the
@@ -1631,7 +1582,6 @@ def kmeans_bucketed_cosine_pairs(
         vec_col=vec_col,
         nlist=nlist,
         iterations=iterations,
-        quant=quant,
         vector_out_col="__qv",
     ).withColumn(
         "__n2",
@@ -1694,7 +1644,7 @@ def kmeans_bucketed_cosine_pairs(
             if m < 2:
                 return empty
             q = np.array(list(pdf["__qv"]), dtype=np.int64)  # (m, dim)
-            dot = q @ q.T  # exact int64 (dim * quant^2 ~ 2^41 < 2^63)
+            dot = q @ q.T  # exact int64 (dim * EMBED_QUANT^2 ~ 2^41 < 2^63)
             n2 = np.einsum("ij,ij->i", q, q)
             ia, ib = np.triu_indices(m, k=1)  # sorted ids: id_a < id_b
             d, a2, b2 = dot[ia, ib], n2[ia], n2[ib]
@@ -1781,7 +1731,6 @@ def mutual_knn_pairs(
     nlist: int | str = 8,
     nprobe: int = 3,
     iterations: int = 2,
-    quant: int = 1_000_000,
 ) -> DataFrame:
     """MUTUAL k-nearest-neighbor pairs: (id_a < id_b) such that each is
     in the other's top-k cosine neighborhood — the standard kNN-graph
@@ -1844,7 +1793,6 @@ def mutual_knn_pairs(
         vec_col=vec_col,
         nlist=nlist,
         iterations=iterations,
-        quant=quant,
         centroids_out=cents,
     )
     sq = F.aggregate(
@@ -1852,9 +1800,7 @@ def mutual_knn_pairs(
     )
     base = df.select(
         F.col(id_col).alias("__id"),
-        F.transform(
-            F.col(vec_col), lambda x: F.floor(x * F.lit(float(quant)))
-        ).alias("__qv"),
+        F.transform(F.col(vec_col), _quantize).alias("__qv"),
     ).withColumn("__n2", sq).filter(F.col("__n2") > 0)
     corpus = base.select(
         F.col("__id").alias("nid"),
@@ -1923,7 +1869,6 @@ def label_centroid_coherence(
     *,
     label_col: str = "label",
     vec_col: str = "embedding",
-    quant: int = 1_000_000,
 ) -> DataFrame:
     """Per-label EMBEDDING COHERENCE diagnostic in exact integers —
     does a label's vectors point the same way, or has the encoder
@@ -1933,13 +1878,13 @@ def label_centroid_coherence(
     directions it stays near the single-vector norm scale — so a
     cross-label comparison (or a round-over-round diff) of this one
     number flags label-embedding degradation without any float
-    normalization. Quantization is ``floor(x * quant)`` per element
+    normalization. Quantization is ``floor(x * EMBED_QUANT)`` per element
     (a floor over a correctly-rounded IEEE multiply — deterministic in
     both engines, the quantized_topk convention).
 
     Scale shape: posexplode -> ONE (label, position)-keyed sum (map-
     side combinable; the shuffle is |labels| x dim rows, not corpus-
-    sized), squares accumulated in DECIMAL(38,0) (n * quant can push
+    sized), squares accumulated in DECIMAL(38,0) (n * EMBED_QUANT can push
     element sums past int32 and their squares past int64), one
     label-grain count joined back (AQE-sized). No windows, no
     driver collects, no pair joins.
@@ -1955,7 +1900,7 @@ def label_centroid_coherence(
     # floor must see the same correctly-rounded product in both engines
     q = F.transform(
         F.col(vec_col),
-        lambda x: F.floor(x.cast("double") * F.lit(quant)).cast("long"),
+        lambda x: F.floor(x.cast("double") * F.lit(EMBED_QUANT)).cast("long"),
     )
     per_pos = (
         df.select(F.col(label_col).alias("label"), F.posexplode(q))

@@ -59,6 +59,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import md5_int60
+
 __all__ = [
     "heavy_hitters",
     "heavy_hitters_by",
@@ -475,9 +477,9 @@ def kmv_distinct(
     — every step replays bit-for-bit in any engine with md5, so the
     ESTIMATE itself is oracle-checkable, not just plausible.
 
-    CONTRACT: the hash is the repo's standard 60-bit
-    ``conv(substr(md5(token), 1, 15), 16, 10)``; hash collisions merge
-    (deduped on hash — deterministic both engines). Groups with fewer
+    CONTRACT: the hash is the repo's standard 60-bit ``md5_int60`` of
+    the token; hash collisions merge (deduped on hash — deterministic
+    both engines). Groups with fewer
     than ``k`` distinct hashes emit their EXACT count (the sketch is
     lossless below k). ``h_k = 0`` (all-zero md5 prefix) guards to 1
     rather than dividing by zero. ``(k-1) * 2^60`` exceeds int64 for
@@ -514,9 +516,7 @@ def kmv_distinct(
     )
     hashed = tok.select(
         *gc,
-        F.conv(F.substring(F.md5("__tok"), 1, 15), 16, 10)
-        .cast("long")
-        .alias("__h"),
+        md5_int60(F.col("__tok")).alias("__h"),
     ).distinct()
     w = Window.partitionBy(*gc).orderBy("__h")
     kept = hashed.withColumn("__rn", F.row_number().over(w)).filter(

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from . import md5_int60
+
 # Tiny embedded stopword list: enough for a deterministic English-ness
 # signal without external data files (language-ID proper would load
 # per-language frequency tables; this is the n-gram-heuristic variant).
@@ -263,15 +265,11 @@ def rolling_hash_fingerprint(
     extends incrementally token-by-token, the property rolling hashes
     exist for.
     """
-    toks = tokens(text)
-    tok_h = (
-        lambda tok: F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
-        % F.lit(mod)
-    )
     return F.aggregate(
-        toks,
+        tokens(text),
         F.lit(0).cast("long"),
-        lambda acc, tok: (acc * F.lit(base) + tok_h(tok)) % F.lit(mod),
+        lambda acc, tok: (acc * F.lit(base) + md5_int60(tok) % F.lit(mod))
+        % F.lit(mod),
     )
 
 
@@ -341,9 +339,7 @@ def winnow_fingerprints(
         "__wn_hs",
         F.transform(
             gram_multiset(F.col("__wn_tk"), k),
-            lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10)
-            .cast("long")
-            % F.lit(mod),
+            lambda g: md5_int60(g) % F.lit(mod),
         ),
     )
     hs = F.col("__wn_hs")

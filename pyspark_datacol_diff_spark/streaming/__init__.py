@@ -34,6 +34,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators import PPM
+
 
 def stage_files(*paths: str, dir_suffix: str = "stream_src") -> str:
     """Stage parquet inputs into a fresh temp directory and return it —
@@ -672,7 +674,6 @@ def continuous_transitions(
     query_name: str,
     state_root: str | None = None,
     state_partitions: int | None = 4,
-    ppm_scale: int = 1_000_000,
 ) -> DataFrame:
     """Continuously-maintained MARKOV TRANSITION counts — the first
     ORDER-SENSITIVE member of the continuous_* family: unlike the
@@ -783,7 +784,7 @@ def continuous_transitions(
         "from_state",
         "to_state",
         "n",
-        F.expr(f"n * {ppm_scale}L DIV __n_from").alias("p_ppm"),
+        F.expr(f"n * {PPM}L DIV __n_from").alias("p_ppm"),
     )
 
 

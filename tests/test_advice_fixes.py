@@ -586,9 +586,9 @@ def test_prefix_jaccard_threshold_one(spark):
 
 def test_position_attribution_full_first_last_split(spark):
     """r08 fresh-lens: first_pct + last_pct = 100 leaves a zero middle
-    pool — middles get exactly 0, every session still sums to
-    total_ppm; with an odd total the middle pool's single leftover ppm
-    is accounted (never lost, never doubled)."""
+    pool — middles get exactly 0, every session still sums to PPM; a
+    middle pool that does not split evenly gives its leftover ppm to
+    the first touch (never lost, never doubled)."""
     import datetime as dt
 
     from pyspark_datacol_diff_spark.operators.range_join import (
@@ -609,13 +609,20 @@ def test_position_attribution_full_first_last_split(spark):
     got = sorted((x["touch_no"], x["credit_ppm"]) for x in r)
     assert got == [(1, 500_000), (2, 0), (3, 500_000)]
 
+    five = spark.createDataFrame(
+        [(1, b + dt.timedelta(minutes=i), 100 + i) for i in range(5)],
+        "user_id long, ts timestamp, event_id long",
+    )
     r = position_attribution(
-        df, ["user_id"], "ts", total_ppm=999_999, first_pct=40,
-        last_pct=60, tiebreak_cols=["event_id"],
+        five, ["user_id"], "ts", first_pct=40, last_pct=40,
+        tiebreak_cols=["event_id"],
     ).collect()
-    assert sum(x["credit_ppm"] for x in r) == 999_999
+    assert sum(x["credit_ppm"] for x in r) == 1_000_000
     got = sorted((x["touch_no"], x["credit_ppm"]) for x in r)
-    assert got == [(1, 399_999), (2, 1), (3, 599_999)]
+    # middle pool 200_000 over 3 middles: 66_666 each, remainder 2 first
+    assert got == [
+        (1, 400_002), (2, 66_666), (3, 66_666), (4, 66_666), (5, 400_000)
+    ]
 
 
 # --- round-10 advice items (fixed in round 11) ---
@@ -649,11 +656,12 @@ def test_collapse_repeats_entry_keeps_null_event_type_group(spark, tmp_path):
     assert out["click"] == (2, 2, 0)
 
 
-def test_chi2_per_cell_overflow_raises_loudly(spark):
-    """ADVICE r10 #2: past the n^3*ppm_scale < 10^38 bound the per-cell
+def test_chi2_per_cell_overflow_raises_loudly(spark, monkeypatch):
+    """ADVICE r10 #2: past the n^3*PPM < 10^38 bound the per-cell
     DECIMAL(38,0) product went NULL in non-ANSI mode and F.sum silently
     skipped it — a silently WRONG statistic. It now raises at
     execution, like the rest of the checked-cast family."""
+    from pyspark_datacol_diff_spark.operators import quality
     from pyspark_datacol_diff_spark.operators.quality import chi2_ppm
 
     df = spark.createDataFrame(
@@ -666,10 +674,11 @@ def test_chi2_per_cell_overflow_raises_loudly(spark):
     # ANSI mode (the Spark 4 default) raises its own loud
     # NUMERIC_VALUE_OUT_OF_RANGE on the product; the in-plan guard
     # covers non-ANSI mode where the product would go silently NULL
+    monkeypatch.setattr(quality, "PPM", 10**34)
     with pytest.raises(
         Exception, match="chi2_ppm.*overflow|NUMERIC_VALUE_OUT_OF_RANGE"
     ):
-        chi2_ppm(df, "r", "c", ppm_scale=10**34).collect()
+        chi2_ppm(df, "r", "c").collect()
 
 
 def test_skew_probe_outer_rows_metric_emits_rank_column(spark):

@@ -383,8 +383,8 @@ def test_pagerank_exact_validation(spark):
         pagerank_exact(e, iterations=0)
     with pytest.raises(ValueError, match="damping"):
         pagerank_exact(e, damping_num=100, damping_den=100)
-    with pytest.raises(ValueError, match="scale"):
-        pagerank_exact(e, scale=10, damping_den=100)
+    with pytest.raises(ValueError, match="damping_den must be <= PPM"):
+        pagerank_exact(e, damping_den=10**7)
 
 
 class TestPersonalizedPagerank:

@@ -111,14 +111,14 @@ def test_minhash_lsh_ml_variant(spark):
     assert {(0, 1), (0, 3), (1, 3)} <= got
 
 
-def test_minhash_hash_fn_portable_and_invalid(spark):
+def test_minhash_md5_matches_hand_replay(spark):
     import hashlib
 
     from pyspark_datacol_diff_spark.operators import dedup as DD
 
     df = spark.createDataFrame([(1, "alpha beta gamma delta")], ["doc_id", "text"])
     sig = DD.minhash_signatures(
-        df, "doc_id", "text", n=3, num_hashes=4, hash_fn="md5"
+        df, "doc_id", "text", n=3, num_hashes=4
     ).collect()[0]["sig"]
     # replay by hand: 2 shingles, md5-first-8-hex gram hash, seeded coeffs
     coeffs = DD.minhash_coefficients(4)
@@ -126,11 +126,6 @@ def test_minhash_hash_fn_portable_and_invalid(spark):
     hs = [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams]
     want = [min((a * h + b) % DD._MH_PRIME for h in hs) for a, b in coeffs]
     assert sig == want
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        DD.minhash_signatures(df, "doc_id", "text", hash_fn="sha1")
 
 
 def test_simhash_md5_matches_hand_vote(spark):
@@ -141,9 +136,7 @@ def test_simhash_md5_matches_hand_vote(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon")], ["doc_id", "text"]
     )
-    fp = DD.simhash_fingerprints(
-        df, "doc_id", "text", n=3, bits=32, hash_fn="md5"
-    ).collect()[0]["fp"]
+    fp = DD.simhash_fingerprints(df, "doc_id", "text", n=3).collect()[0]["fp"]
     grams = ["alpha beta gamma", "beta gamma delta", "gamma delta epsilon"]
     hs = [int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams]
     want = 0
@@ -152,10 +145,17 @@ def test_simhash_md5_matches_hand_vote(spark):
             want |= 1 << i
     assert fp == want
 
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        DD.simhash_fingerprints(df, "doc_id", "text", hash_fn="crc32")
+def test_simhash_band_bits_must_divide_fingerprint(spark):
+    """A band wider than the 32-bit fingerprint used to give zero bands,
+    so even identical documents were never paired; it now raises, like
+    srp_near_dup_pairs (the two share one band join)."""
+    import pytest
+
+    df = corpus(spark)
+    for bad in (64, 12, 0):
+        with pytest.raises(ValueError, match="band_bits"):
+            DD.simhash_near_dups(df, "doc_id", "text", band_bits=bad)
 
 
 def test_incremental_new_filters_store_and_batch_dups(spark):

@@ -75,6 +75,49 @@ def test_counts_match_construction(spark, plan):
     assert counts.get("b", 0) == len(diff_b)
 
 
+_VALUE = st.one_of(st.none(), st.sampled_from(["", "a", "b", "x y"]))
+
+
+@st.composite
+def changeset_pair(draw):
+    """Two unique-key string frames: each key sits in s1 only, s2 only
+    or both, and each value (NULL and '' included) may change between
+    the sides."""
+    s1, s2 = [], []
+    for i in range(draw(st.integers(min_value=0, max_value=25))):
+        where = draw(st.sampled_from(["s1", "s2", "both"]))
+        old = (f"k{i}", draw(_VALUE), draw(_VALUE))
+        new = (f"k{i}", draw(_VALUE), draw(_VALUE)) if draw(st.booleans()) else old
+        if where != "s2":
+            s1.append(old)
+        if where != "s1":
+            s2.append(new)
+    return s1, s2
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(pair=changeset_pair())
+def test_apply_diff_round_trip_with_nulls(spark, pair):
+    """``apply_diff(s1, diff(s1, s2))`` gives back s2 as a multiset, with
+    NULL and '' kept apart (``null_equals_blank=False``) and inserts
+    carried (``carry_unmatched=True``)."""
+    from collections import Counter
+
+    from pyspark_datacol_diff_spark.operators.diff import apply_diff
+
+    s1_rows, s2_rows = pair
+    schema = "id string, a string, b string"
+    s1 = spark.createDataFrame(s1_rows, schema)
+    s2 = spark.createDataFrame(s2_rows, schema)
+    d = diff(s1, s2, ["id"], null_equals_blank=False, carry_unmatched=True)
+    rebuilt = apply_diff(s1, d, ["id"], ["a", "b"])
+    assert Counter(tuple(r) for r in rebuilt.collect()) == Counter(s2_rows)
+
+
 @st.composite
 def corpus_plan(draw):
     n = draw(st.integers(min_value=5, max_value=40))
