@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_datacol_diff_spark import diff, flag_counts, column_mismatch_counts
+from pyspark_datacol_diff_spark.operators import checked_long
 from pyspark_datacol_diff_spark.operators import diff as DIFF_OPS
 from pyspark_datacol_diff_spark.operators import dedup as DD
 from pyspark_datacol_diff_spark.operators import similarity as SIM
@@ -766,34 +767,14 @@ def _copurchase_pairs(
     co-occurring in >= ``min_orders`` orders as ``(p1 < p2,
     n_orders)``.
 
-    Scalable shape is basket-explode, NOT a fact self-join: each order
-    reduces to its sorted distinct item array (ONE order-keyed shuffle
-    — collect_set deduplicates per order with map-side partial sets),
-    ordered pairs (i < j) come from a per-row nested ``transform``
-    over that array, and the pair counts hash-aggregate on the pair
-    key.
-
-    The basket frame is REPARTITIONED to defaultParallelism before
-    the explode: AQE coalesces the basket aggregate's output by its
-    BYTE size (a few MB -> 3-4 partitions), blind to the ~50x row
-    amplification of the pair expansion that follows — measured as a
-    single-straggler stage on every graph query. One cheap shuffle of
-    the small basket relation buys full-width parallelism for the
-    quadratic stage (the same reasoning as sources.balance_partitions,
-    applied to a mid-plan amplification point).
-
-    ``cap`` bounds per-basket work on hot baskets: only each order's
-    ``cap`` smallest part ids enter the pair expansion, so per-row
-    cost is min(s, cap)^2 and a mega-basket cannot dominate a task.
-    BIAS NOTE: pairs containing only items beyond an order's first
-    ``cap`` (sorted ascending) are undercounted — acceptable for
-    graph curation on real basket tables, mirrored exactly in the
-    capped oracle via a rank <= cap predicate. TPC-H orders carry <=
-    7 lines so the uncapped default is exact there.
-
     Promoted to the package in r08 (VERDICT r07 #8): delegates to
     operators/cooccur.py:basket_pairs, the public face library users
-    call for the same hot-basket-guarded mining.
+    call for the same mining. Its docstring holds the scale shape (one
+    order-keyed ``collect_set`` shuffle, a repartition before the pair
+    expansion, ``suffix_pairs`` for the i < j pairs, a pair-keyed hash
+    aggregate) and the hot-basket ``cap`` bias contract, which the
+    capped oracle mirrors with a rank <= cap predicate. TPC-H orders
+    carry <= 7 lines, so the uncapped default is exact there.
     """
     li = _t(spark, sf_dir, "lineitem")
     return CO.basket_pairs(
@@ -820,8 +801,8 @@ def _q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     each order reduces to its sorted distinct item array (ONE
     order-keyed shuffle — collect_set deduplicates per order with
     map-side partial sets, so no separate distinct pass), ordered
-    pairs (i < j) come from a per-row nested `transform` over that
-    array (no second shuffle, no items x items join), and the pair
+    pairs (i < j) stream out of a posexplode plus suffix-slice explode
+    of that array (no second shuffle, no items x items join), and the pair
     counts hash-aggregate on the pair key. Per-row work is quadratic
     in BASKET size — fine
     for order-shaped baskets (max 11 here); web-session baskets need a
@@ -1402,7 +1383,7 @@ def _q_hits_parts_customers(
     weights each buyer by that buyer's own purchasing breadth — the
     endorsement-weighted popularity ranking one step past raw degree.
     Incidence = orders x lineitem distinct (custkey, partkey); final
-    scores cast to BIGINT through cluster.checked_long, which RAISES
+    scores cast to BIGINT through operators.checked_long, which RAISES
     on overflow instead of non-ANSI's silent NULL (scores grow like
     degree^iterations — bounded well inside int64 at <= 2 iterations
     and driver scales, but a quiet NULL would corrupt a parity compare
@@ -1415,7 +1396,7 @@ def _q_hits_parts_customers(
     r = CC.hits_bipartite(inc, hub_col="cust", auth_col="part", iterations=2)
     return r.select(
         F.col("auth").alias("part"),
-        CC.checked_long(F.col("score"), context="HITS score").alias("score"),
+        checked_long(F.col("score"), context="HITS score").alias("score"),
     )
 
 
@@ -1772,7 +1753,7 @@ def _q_mutual_knn_ivf_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_mutual_knn_ivf_embed(
-    nlist: int = 8, iterations: int = 2, quant: int = 1_000_000,
+    nlist: int = 8, iterations: int = 2,
     dim: int = 64, nprobe: int = 5, k: int = 5, mod: int = 5,
 ) -> str:
     """Full replay of the IVF mutual-kNN path: the shared unrolled
@@ -1781,9 +1762,7 @@ def _sql_mutual_knn_ivf_embed(
     candidates from the cell join, cosine from the exact int64 dot
     over IEEE-double norms, (sim DESC, id) top-k, reciprocal join."""
     src = f"(SELECT * FROM embeddings WHERE vec_id % {mod} = 0)"
-    parts, n_assign = _kmeans_cte_parts(
-        nlist, iterations, quant, dim, src=src
-    )
+    parts, n_assign = _kmeans_cte_parts(nlist, iterations, dim, src=src)
     parts.append(f""",
 fin AS (SELECT vec_id, qv, cell,
           CAST(list_aggregate(list_transform(qv, x -> x * x), 'sum')
@@ -7222,8 +7201,7 @@ def _q_kmeans_cosine_pairs_embed(
 
 
 def _kmeans_cte_parts(
-    nlist: int, iterations: int, quant: int, dim: int,
-    src: str = "embeddings",
+    nlist: int, iterations: int, dim: int, src: str = "embeddings",
 ) -> tuple[list, int]:
     """Shared unrolled-iteration CTE chain replaying
     kmeans_exact_assign in DuckDB: same quantization, same md5 seed
@@ -7238,7 +7216,7 @@ def _kmeans_cte_parts(
     parts = [f"""
 WITH q AS (SELECT vec_id,
              list_transform(embedding,
-               x -> CAST(floor(CAST(x AS DOUBLE) * {quant}) AS BIGINT)) AS qv
+               x -> CAST(floor(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS qv
            FROM {src}),
 seed AS (SELECT vec_id, qv,
                 row_number() OVER (
@@ -7270,10 +7248,9 @@ c{k} AS (SELECT c.cell, coalesce(m.cv, c.cv) AS cv
 
 
 def _sql_kmeans_cells_embed(
-    nlist: int = 4, iterations: int = 2, quant: int = 1_000_000,
-    dim: int = 64,
+    nlist: int = 4, iterations: int = 2, dim: int = 64,
 ) -> str:
-    parts, n_assign = _kmeans_cte_parts(nlist, iterations, quant, dim)
+    parts, n_assign = _kmeans_cte_parts(nlist, iterations, dim)
     parts.append(
         f"\nSELECT vec_id, CAST(cell AS INTEGER) AS cell FROM a{n_assign}"
     )
@@ -7281,13 +7258,13 @@ def _sql_kmeans_cells_embed(
 
 
 def _sql_kmeans_cosine_pairs_embed(
-    nlist: int = 4, iterations: int = 2, quant: int = 1_000_000,
+    nlist: int = 4, iterations: int = 2,
     dim: int = 64, sim_num: int = 2, sim_den: int = 5,
 ) -> str:
     """Cell-bucketed exact-integer cosine pairs on top of the same
     unrolled kmeans chain: the threshold replays Spark's DECIMAL(38,0)
     square comparison in DuckDB HUGEINT (both 128-bit exact)."""
-    parts, n_assign = _kmeans_cte_parts(nlist, iterations, quant, dim)
+    parts, n_assign = _kmeans_cte_parts(nlist, iterations, dim)
     parts.append(f""",
 f AS (SELECT vec_id, qv, cell,
         CAST(list_aggregate(list_transform(qv, x -> x * x), 'sum')

@@ -30,7 +30,7 @@ column is always parts per million — so they are defined once here and
 no operator takes them as a parameter.
 """
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Ratios, shares and probabilities: ``x_ppm = numerator * PPM DIV den``.
@@ -45,6 +45,28 @@ EMBED_QUANT = 1_000_000
 DIGEST_MODULUS = 10**18
 
 
+def checked_long(col: Column, *, context: str = "value") -> Column:
+    """DECIMAL->BIGINT cast that RAISES AT EXECUTION on overflow instead
+    of non-ANSI mode's silent NULL. Guards casts of values that grow
+    with the data (hits_bipartite scores grow like degree^iterations):
+    an overflow surfaces as a loud job failure naming the context, never
+    as a NULL that quietly drops rows from a parity compare."""
+    return F.when(
+        (col >= F.lit(-(2**63)).cast("decimal(38,0)"))
+        & (col <= F.lit(2**63 - 1).cast("decimal(38,0)")),
+        col.cast("long"),
+    ).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"checked_long: {context} overflows BIGINT ("),
+                col.cast("string"),
+                F.lit(") — keep DECIMAL(38,0) end-to-end or reduce "
+                      "iterations/scale"),
+            )
+        )
+    )
+
+
 def md5_int32(s: Column) -> Column:
     """32-bit integer from the first 8 hex digits of ``md5(s)`` (DuckDB:
     ``('0x' || substr(md5(s), 1, 8))::BIGINT``)."""
@@ -55,3 +77,23 @@ def md5_int60(s: Column) -> Column:
     """60-bit integer from the first 15 hex digits of ``md5(s)`` (DuckDB:
     ``('0x' || substr(md5(s), 1, 15))::BIGINT``)."""
     return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+
+
+def suffix_pairs(df: DataFrame, arr: str, *carry: str) -> DataFrame:
+    """Every ``i < j`` pair of the sorted array column ``arr``: one row
+    ``(*carry, a, b)`` per pair, ``a = arr[i]`` and ``b = arr[j]``, so a
+    list of distinct ascending elements yields ``a < b``. The pair step
+    of the posting-list, neighbour-list and basket miners.
+
+    posexplode each list, then explode the suffix after position i:
+    generator output streams through codegen, and per-row allocation is
+    one slice instead of a flattened d(d-1)/2 pair array. ``carry``
+    columns ride along unchanged."""
+    i = F.col("__i")
+    return df.select(*carry, arr, F.posexplode(arr).alias("__i", "a")).select(
+        *carry,
+        "a",
+        F.explode(
+            F.slice(arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0)))
+        ).alias("b"),
+    )

@@ -56,10 +56,11 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import PPM
+from . import PPM, suffix_pairs
+from .cooccur import symmetric_edges
 
 
 def _free_ckpt(df: DataFrame) -> None:
@@ -719,22 +720,10 @@ def kcore_peel(
     e = _canonical(
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
     )
-    # undirected degree: count each edge from both endpoints. The
-    # doubling is an explode (ONE reference to e), not a two-arm
-    # union — the upstream pair pipeline executes once inside the
-    # checkpoint job instead of twice (the CC edge-doubling shape).
-    prev = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("s"), F.col("d")),
-                    F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-                )
-            ).alias("x")
-        )
-        .select("x.s", "x.d")
-        .localCheckpoint(eager=True)
-    )
+    # undirected degree: count each edge from both endpoints
+    prev = symmetric_edges(
+        e, p1_col="s", p2_col="d", src_col="s", dst_col="d"
+    ).localCheckpoint(eager=True)
     for _ in range(rounds):
         deg = prev.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("s")
@@ -935,6 +924,106 @@ def label_propagation(
     return labeled
 
 
+def _neighbor_lists(
+    edges: DataFrame, src_col: str, dst_col: str, max_degree: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """The neighbour-list stage the link scorers share. Returns
+    ``(e, hubs)``: ``e`` is the canonical edge set ``(s, d)``, s < d,
+    lazily checkpointed; ``hubs`` is ``(n, deg, ns)`` per node, with
+    ``deg`` the FULL degree and ``ns`` the ascending neighbour list
+    sliced to its first ``max_degree`` entries.
+
+    Scale shape: ``e`` is checkpointed because every scorer reads it
+    twice (the doubling here and its own existing-edge join) and the
+    planner reuses no subtree, so the upstream pair-mining pipeline
+    would otherwise run once per reference (measured: 7 parquet scans
+    in one action). The doubling is one explode, the lists are ONE
+    node-keyed shuffle (the posting-list move, not an edges x edges
+    self-join), and the slice bounds per-node pair work at
+    min(deg, cap)^2 — the hot-basket cap: a hub's neighbours beyond
+    the cap are dropped BY CONTRACT, deterministically, mirrored in
+    the oracles' rank <= cap predicate. ``hubs`` is repartitioned to
+    ``defaultParallelism``: AQE coalesces the aggregate by its byte
+    size, blind to the quadratic pair expansion that follows."""
+    if max_degree is not None and max_degree < 2:
+        raise ValueError(
+            f"max_degree must be >= 2 (a 1-neighbor cap generates no "
+            f"wedges at all), got {max_degree}"
+        )
+    e = _canonical(
+        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
+    ).localCheckpoint(eager=False)
+    und = symmetric_edges(e, p1_col="s", p2_col="d", src_col="s", dst_col="d")
+    hubs = und.groupBy(F.col("s").alias("n")).agg(
+        F.array_sort(F.collect_set("d")).alias("ns_full")
+    )
+    sliced = (
+        F.slice("ns_full", 1, max_degree)
+        if max_degree is not None
+        else F.col("ns_full")
+    )
+    hubs = hubs.select(
+        "n", F.size("ns_full").cast("long").alias("deg"), sliced.alias("ns")
+    ).repartition(edges.sparkSession.sparkContext.defaultParallelism)
+    return e, hubs
+
+
+def _link_candidates(
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    k: int,
+    max_degree: int | None,
+    rank_by: str,
+) -> DataFrame:
+    """The link-prediction pipeline: wedge pairs of every neighbour
+    list (:func:`suffix_pairs`, u < v) hash-aggregate on the pair key
+    into ``common_cnt`` and ``ra_ppm = sum(PPM DIV deg(center))``,
+    one anti join drops existing edges (candidates are canonical, so
+    one orientation suffices), and each node keeps its top ``k``
+    candidates by (``rank_by`` DESC, candidate ASC) over both
+    orientations of each pair — one explode, so the candidate relation
+    is read once. Returns ``(node, candidate, ra_ppm, common_cnt,
+    rank)``."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    e, hubs = _neighbor_lists(edges, src_col, dst_col, max_degree)
+    wedges = suffix_pairs(
+        hubs.select("ns", F.expr(f"{PPM}L DIV deg").alias("w_ppm")),
+        "ns",
+        "w_ppm",
+    )
+    scored = wedges.groupBy(F.col("a").alias("u"), F.col("b").alias("v")).agg(
+        F.sum("w_ppm").alias("ra_ppm"),
+        F.count(F.lit(1)).alias("common_cnt"),
+    )
+    cand = scored.join(
+        e.select(F.col("s").alias("u"), F.col("d").alias("v")).hint(
+            "shuffle_hash"
+        ),
+        ["u", "v"],
+        "anti",
+    )
+    both = symmetric_edges(
+        cand, p1_col="u", p2_col="v", src_col="node", dst_col="candidate",
+        weight_cols=["ra_ppm", "common_cnt"],
+    )
+    w = Window.partitionBy("node").orderBy(
+        F.desc(rank_by), F.asc("candidate")
+    )
+    return (
+        both.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "node",
+            "candidate",
+            "ra_ppm",
+            "common_cnt",
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
 def common_neighbor_candidates(
     edges: DataFrame,
     *,
@@ -952,94 +1041,20 @@ def common_neighbor_candidates(
     "documents linked from the same documents") and the cheap
     candidate stage under heavier rankers.
 
-    Scale shape: neighbor lists are gathered per node (one keyed
-    shuffle — the posting-list move, not an edges x edges self-join),
-    ``max_degree`` SLICES each sorted list to its first ``max_degree``
-    neighbors before the quadratic pair expansion (per-node work
-    bounded at min(deg, cap)^2 — the hot-basket cap; a hub's tail
-    neighbors beyond the cap are dropped BY CONTRACT and the bias is
-    deterministic, mirrored in the oracle's rank <= cap predicate),
-    wedge pairs hash-aggregate on the pair key, existing edges are
-    removed with one anti join, and the top-k cut is a per-node
-    max-struct window over the (small) candidate relation.
+    ``max_degree`` slices each node's sorted neighbor list to its first
+    ``max_degree`` neighbors before the quadratic pair expansion: a
+    hub's tail neighbors beyond the cap are dropped BY CONTRACT and the
+    bias is deterministic, mirrored in the oracle's rank <= cap
+    predicate. Scale shape: :func:`_neighbor_lists` then
+    :func:`_link_candidates`, ranked by ``common_cnt``.
 
     Returns ``(node, candidate, common_cnt, rank)`` with rank in
     [1, k].
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if max_degree is not None and max_degree < 2:
-        raise ValueError(
-            f"max_degree must be >= 2 (a 1-neighbor cap generates no "
-            f"wedges at all), got {max_degree}"
-        )
-    # checkpoint the canonical edge list (consumed by both doubling
-    # arms + the existing-edge anti join — the un-reused upstream pair
-    # pipeline executed 3x, the edge_structural_similarity finding);
-    # doubling via explode keeps it to ONE reference
-    e = _canonical(
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    ).localCheckpoint(eager=False)
-    und = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s"), F.col("d")),
-                F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-            )
-        ).alias("x")
-    ).select("x.s", "x.d")
-    nbrs = F.array_sort(F.collect_set("d"))
-    if max_degree is not None:
-        nbrs = F.slice(nbrs, 1, max_degree)
-    hubs = und.groupBy(F.col("s").alias("n")).agg(nbrs.alias("ns"))
-    hubs = hubs.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism
-    )
-    x1 = hubs.select("ns", F.posexplode("ns").alias("i", "a"))
-    wedges = x1.select(
-        F.col("a").alias("u"),
-        F.explode(
-            F.slice(
-                "ns",
-                F.col("i") + 2,
-                F.greatest(F.size("ns") - F.col("i") - 1, F.lit(0)),
-            )
-        ).alias("v"),
-    )
-    cn = wedges.groupBy("u", "v").agg(
-        F.count(F.lit(1)).alias("common_cnt")
-    )
-    # drop already-adjacent pairs: candidates are canonical (u < v from
-    # the sorted neighbor arrays), so one semi-orientation anti join.
-    # Checkpointed: BOTH orientation arms below read it, and without
-    # truncation the whole wedge expansion + anti join ran twice.
-    cand = cn.join(
-        e.select(F.col("s").alias("u"), F.col("d").alias("v")).hint(
-            "shuffle_hash"
-        ),
-        ["u", "v"],
-        "anti",
-    ).localCheckpoint(eager=False)
-    # per-node top-k over BOTH orientations of each candidate pair
-    both = cand.select(
-        F.col("u").alias("node"),
-        F.col("v").alias("candidate"),
-        "common_cnt",
-    ).unionByName(
-        cand.select(
-            F.col("v").alias("node"),
-            F.col("u").alias("candidate"),
-            "common_cnt",
-        )
-    )
-    w = Window.partitionBy("node").orderBy(
-        F.desc("common_cnt"), F.asc("candidate")
-    )
-    return (
-        both.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("node", "candidate", "common_cnt", F.col("rank").cast("long").alias("rank"))
-    )
+    # the optimizer prunes the unread ra_ppm sum from the wedge aggregate
+    return _link_candidates(
+        edges, src_col, dst_col, k, max_degree, "common_cnt"
+    ).drop("ra_ppm")
 
 
 def resource_allocation_candidates(
@@ -1060,14 +1075,11 @@ def resource_allocation_candidates(
     recommendation benchmarks, and RA's reciprocal discount needs no
     float log, so the score replays bit-for-bit in any engine).
 
-    Scale shape is :func:`common_neighbor_candidates` with the wedge
-    CENTER's weight riding the expansion: per-node neighbor lists
-    (one keyed shuffle), ``max_degree`` slice before the quadratic
-    wedge expansion (same deterministic-bias contract — but the
-    DISCOUNT uses the center's FULL degree, computed on the unsliced
-    set, so a capped hub still discounts as the hub it is), wedge
-    pairs hash-aggregate on the pair key carrying ``sum(w_ppm)``, one
-    anti join against existing edges, per-node top-``k`` by
+    Same ``max_degree`` deterministic-bias contract as
+    :func:`common_neighbor_candidates` — but the DISCOUNT uses the
+    center's FULL degree, computed on the unsliced set, so a capped
+    hub still discounts as the hub it is. Scale shape:
+    :func:`_neighbor_lists` then :func:`_link_candidates`, ranked by
     (ra_ppm DESC, candidate ASC).
 
     Returns ``(node, candidate, ra_ppm, common_cnt, rank)``.
@@ -1075,93 +1087,7 @@ def resource_allocation_candidates(
     Reference scope note: no graph operators exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    if max_degree is not None and max_degree < 2:
-        raise ValueError(
-            f"max_degree must be >= 2 (a 1-neighbor cap generates no "
-            f"wedges at all), got {max_degree}"
-        )
-    # same branch-point truncation as common_neighbor_candidates: the
-    # canonical edge list feeds the doubling AND the anti join
-    e = _canonical(
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    ).localCheckpoint(eager=False)
-    und = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s"), F.col("d")),
-                F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-            )
-        ).alias("x")
-    ).select("x.s", "x.d")
-    full = F.array_sort(F.collect_set("d"))
-    hubs = und.groupBy(F.col("s").alias("n")).agg(full.alias("ns_full"))
-    sliced = (
-        F.slice("ns_full", 1, max_degree)
-        if max_degree is not None
-        else F.col("ns_full")
-    )
-    hubs = hubs.select(
-        "n",
-        F.expr(f"{PPM}L DIV size(ns_full)").alias("w_ppm"),
-        sliced.alias("ns"),
-    )
-    hubs = hubs.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism
-    )
-    x1 = hubs.select("w_ppm", "ns", F.posexplode("ns").alias("i", "a"))
-    wedges = x1.select(
-        "w_ppm",
-        F.col("a").alias("u"),
-        F.explode(
-            F.slice(
-                "ns",
-                F.col("i") + 2,
-                F.greatest(F.size("ns") - F.col("i") - 1, F.lit(0)),
-            )
-        ).alias("v"),
-    )
-    ra = wedges.groupBy("u", "v").agg(
-        F.sum("w_ppm").alias("ra_ppm"),
-        F.count(F.lit(1)).alias("common_cnt"),
-    )
-    # checkpointed: both orientation arms below read it (the
-    # common_neighbor_candidates finding)
-    cand = ra.join(
-        e.select(F.col("s").alias("u"), F.col("d").alias("v")).hint(
-            "shuffle_hash"
-        ),
-        ["u", "v"],
-        "anti",
-    ).localCheckpoint(eager=False)
-    both = cand.select(
-        F.col("u").alias("node"),
-        F.col("v").alias("candidate"),
-        "ra_ppm",
-        "common_cnt",
-    ).unionByName(
-        cand.select(
-            F.col("v").alias("node"),
-            F.col("u").alias("candidate"),
-            "ra_ppm",
-            "common_cnt",
-        )
-    )
-    w = Window.partitionBy("node").orderBy(
-        F.desc("ra_ppm"), F.asc("candidate")
-    )
-    return (
-        both.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "node",
-            "candidate",
-            "ra_ppm",
-            "common_cnt",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _link_candidates(edges, src_col, dst_col, k, max_degree, "ra_ppm")
 
 
 def edge_structural_similarity(
@@ -1182,18 +1108,16 @@ def edge_structural_similarity(
     variant needs no float — closed-neighborhood counts are the open
     ones + 2 for an existing edge, derivable by the caller.)
 
-    Scale shape mirrors :func:`common_neighbor_candidates`: per-node
-    neighbor lists (one keyed shuffle), ``max_degree`` slices each
-    sorted list before the quadratic wedge expansion (per-node work
-    min(deg, cap)^2; pairs whose shared neighbors all rank beyond the
-    cap are undercounted BY CONTRACT, deterministically), wedge pairs
-    hash-aggregate on the pair key, then ONE semi-orientation inner
-    join keeps existing edges only (the link predictors anti-join the
-    same relation) and the FULL degrees (computed on the unsliced
-    neighbor sets) ride in via two broadcast-sized node-grain joins.
-    An existing edge with zero shared neighbors is still emitted
-    (jaccard 0) via a left join from the edge list, not the wedge
-    relation — bridges are the interesting rows.
+    ``max_degree`` slices each sorted neighbor list before the
+    quadratic wedge expansion; pairs whose shared neighbors all rank
+    beyond the cap are undercounted BY CONTRACT, deterministically.
+    Scale shape: :func:`_neighbor_lists`, then wedge pairs
+    hash-aggregate on the pair key, then ONE semi-orientation join
+    keeps existing edges only (the link predictors anti-join the same
+    relation) and the FULL degrees ride in via two broadcast-sized
+    node-grain joins. An existing edge with zero shared neighbors is
+    still emitted (jaccard 0) via a left join from the edge list, not
+    the wedge relation — bridges are the interesting rows.
 
     Returns ``(p1, p2, common_cnt, deg1, deg2, jaccard_ppm)`` with
     p1 < p2; ``jaccard_ppm = common_cnt * PPM DIV
@@ -1203,57 +1127,14 @@ def edge_structural_similarity(
     Reference scope note: no graph operators exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    if max_degree is not None and max_degree < 2:
-        raise ValueError(
-            f"max_degree must be >= 2 (a 1-neighbor cap generates no "
-            f"wedges at all), got {max_degree}"
-        )
-    # the canonical edge list is consumed THREE times (both union arms
-    # of the undirected doubling + the existing-edge probe of the final
-    # left join), and Catalyst/AQE do not reuse the subtree (measured:
-    # the upstream pair-mining pipeline executed 3x = 7 parquet scans
-    # in one action, ReusedExchange count 0) — checkpoint it lazily,
-    # the triangle_counts convention. The doubling itself becomes an
-    # explode (ONE reference) instead of a two-arm union.
-    e = _canonical(
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    ).localCheckpoint(eager=False)
-    und = e.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("s"), F.col("d")),
-                F.struct(F.col("d").alias("s"), F.col("s").alias("d")),
-            )
-        ).alias("x")
-    ).select("x.s", "x.d")
-    full = F.array_sort(F.collect_set("d"))
-    hubs = und.groupBy(F.col("s").alias("n")).agg(full.alias("ns_full"))
-    sliced = (
-        F.slice("ns_full", 1, max_degree)
-        if max_degree is not None
-        else F.col("ns_full")
-    )
-    hubs = hubs.select(
-        "n", F.size("ns_full").cast("long").alias("deg"), sliced.alias("ns")
-    )
+    e, hubs = _neighbor_lists(edges, src_col, dst_col, max_degree)
     # node-grain branch point (wedge expansion + two degree joins read
     # it): checkpoint so the neighborhood aggregate runs once
-    hubs = hubs.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism
-    ).localCheckpoint(eager=False)
-    x1 = hubs.select("ns", F.posexplode("ns").alias("i", "a"))
-    wedges = x1.select(
-        F.col("a").alias("u"),
-        F.explode(
-            F.slice(
-                "ns",
-                F.col("i") + 2,
-                F.greatest(F.size("ns") - F.col("i") - 1, F.lit(0)),
-            )
-        ).alias("v"),
-    )
-    cn = wedges.groupBy("u", "v").agg(
-        F.count(F.lit(1)).alias("common_cnt")
+    hubs = hubs.localCheckpoint(eager=False)
+    cn = (
+        suffix_pairs(hubs, "ns")
+        .groupBy(F.col("a").alias("u"), F.col("b").alias("v"))
+        .agg(F.count(F.lit(1)).alias("common_cnt"))
     )
     deg = hubs.select("n", "deg")
     scored = (
@@ -1272,28 +1153,6 @@ def edge_structural_similarity(
         F.expr(
             f"common_cnt * {PPM}L DIV (deg1 + deg2 - common_cnt)"
         ).alias("jaccard_ppm"),
-    )
-
-
-def checked_long(col: Column, *, context: str = "value") -> Column:
-    """DECIMAL->BIGINT cast that RAISES AT EXECUTION on overflow instead
-    of non-ANSI mode's silent NULL. Guards casts of values that grow
-    with the data (hits_bipartite scores grow like degree^iterations):
-    an overflow surfaces as a loud job failure naming the context, never
-    as a NULL that quietly drops rows from a parity compare."""
-    return F.when(
-        (col >= F.lit(-(2**63)).cast("decimal(38,0)"))
-        & (col <= F.lit(2**63 - 1).cast("decimal(38,0)")),
-        col.cast("long"),
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"checked_long: {context} overflows BIGINT ("),
-                col.cast("string"),
-                F.lit(") — keep DECIMAL(38,0) end-to-end or reduce "
-                      "iterations/scale"),
-            )
-        )
     )
 
 
@@ -1448,19 +1307,16 @@ def local_clustering(
     # pair pipeline for its own canonicalization — 3 executions total,
     # the edge_structural_similarity finding). _canonical is idempotent
     # on an already-canonical frame, so passing canon through is exact.
-    canon = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("a"),
-        F.greatest(F.col(src), F.col(dst)).alias("b"),
-    ).filter(F.col("a") != F.col("b")).distinct().localCheckpoint(
-        eager=False
-    )
+    canon = _canonical(
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+    ).localCheckpoint(eager=False)
     deg = (
-        canon.select(F.col("a").alias("node"))
-        .unionAll(canon.select(F.col("b").alias("node")))
+        canon.select(F.col("s").alias("node"))
+        .unionAll(canon.select(F.col("d").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
-    tri = triangle_counts(canon, "a", "b")
+    tri = triangle_counts(canon, "s", "d")
     return (
         deg.filter(F.col("degree") >= 2)
         .join(tri, "node", "left")

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import PPM
+from . import PPM, suffix_pairs
 
 
 def cooccurrence_stats(
@@ -104,8 +104,9 @@ def basket_pairs(
     Scalable shape is basket-explode, NOT a fact self-join: each group
     reduces to its sorted distinct item array (ONE group-keyed shuffle
     — ``collect_set`` deduplicates per group with map-side partial
-    sets), ordered pairs (i < j) come from a per-row nested
-    ``transform`` over that array, and pair counts hash-aggregate on
+    sets), ordered pairs (i < j) stream out of
+    :func:`~pyspark_datacol_diff_spark.operators.suffix_pairs` (no
+    per-basket d(d-1)/2 pair array), and pair counts hash-aggregate on
     the pair key. The basket frame is repartitioned to
     ``defaultParallelism`` before the explode: AQE coalesces the
     basket aggregate's output by its BYTE size, blind to the ~50x row
@@ -137,17 +138,8 @@ def basket_pairs(
     baskets = df.groupBy(group_col).agg(s.alias("s"))
     baskets = baskets.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(s, (x, i) -> "
-                    "transform(slice(s, i + 2, size(s)), "
-                    "y -> struct(x AS p1, y AS p2))))"
-                )
-            ).alias("pr")
-        )
-        .select(F.col("pr.p1").alias("p1"), F.col("pr.p2").alias("p2"))
-        .groupBy("p1", "p2")
+        suffix_pairs(baskets, "s")
+        .groupBy(F.col("a").alias("p1"), F.col("b").alias("p2"))
         .agg(F.count(F.lit(1)).alias(count_col))
         .filter(F.col(count_col) >= min_count)
     )
@@ -219,7 +211,14 @@ def symmetric_edges(
     planner reuses no subtree, so every downstream materialization
     (pagerank's persisted edge frame, khop's, the k-core init
     checkpoint) executed the whole upstream pair-mining pipeline
-    twice (measured r11)."""
+    twice (measured r11).
+
+    The same doubling runs inside the operators: ``kcore_peel``'s
+    degree frame and the link scorers' neighbour lists
+    (``cluster._neighbor_lists``) double the canonical edge set, the
+    link predictors emit both orientations of each candidate pair, and
+    :func:`association_rules` both directed rules of each basket
+    pair."""
     both = F.explode(
         F.array(
             F.struct(
@@ -280,16 +279,9 @@ def association_rules(
     ).distinct()
     marg = pres.groupBy("item").agg(F.count(F.lit(1)).alias("n_item"))
     totals = pres.select(F.count_distinct("g").alias("n_groups"))
-    both = pairs.select(
-        F.col("p1").alias("antecedent"),
-        F.col("p2").alias("consequent"),
-        "n_ab",
-    ).unionByName(
-        pairs.select(
-            F.col("p2").alias("antecedent"),
-            F.col("p1").alias("consequent"),
-            "n_ab",
-        )
+    both = symmetric_edges(
+        pairs, src_col="antecedent", dst_col="consequent",
+        weight_cols=["n_ab"],
     )
     # item-grain marginals: no forced broadcast (unbounded for generic
     # item domains — AQE picks the strategy from measured sizes; see

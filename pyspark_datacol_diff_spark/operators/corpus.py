@@ -27,7 +27,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import PPM, md5_int32
+from . import PPM, checked_long, md5_int32
 from .text import token_count, tokens
 
 # Portable PII patterns: kept to the regex subset with identical meaning
@@ -1137,8 +1137,6 @@ def simpson_diversity(
     Reference scope note: no text operators exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    from .cluster import checked_long
-
     gc = list(group_cols)
     tok = df.select(
         *gc,
@@ -1205,8 +1203,6 @@ def tv_distance_vs_rest(
     Reference scope note: no text operators exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    from .cluster import checked_long
-
     tok = df.select(
         F.col(group_col).alias("__g"),
         F.explode(

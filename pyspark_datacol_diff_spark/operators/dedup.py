@@ -29,7 +29,7 @@ import logging
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from . import md5_int32
+from . import checked_long, md5_int32, suffix_pairs
 
 logger = logging.getLogger("pyspark_datacol_diff_spark.dedup")
 
@@ -120,8 +120,9 @@ def ngram_jaccard_pairs(
     one shuffle) -> re-key the posting ENTRIES by doc to attach each
     doc's shingle-set size with a window count -> regroup into sorted
     ``(id, sz)`` struct lists -> emit the i<j doc pairs of each list
-    via posexplode + suffix-slice explode, sizes riding along -> count
-    pair occurrences (= intersection size) -> Jaccard filter.
+    with :func:`~pyspark_datacol_diff_spark.operators.suffix_pairs`,
+    sizes riding along -> count pair occurrences (= intersection size)
+    -> Jaccard filter.
 
     Carrying the sizes INSIDE the posting lists replaces the former
     two shuffled-hash size joins whose probe side was the full distinct-
@@ -145,6 +146,10 @@ def ngram_jaccard_pairs(
 
     Returns ``(id_a, id_b, inter_cnt, size_a, size_b, jaccard)``.
     """
+    if not 0.0 <= threshold <= 1.0:
+        raise ValueError(f"threshold must be in [0, 1], got {threshold}")
+    if n < 1:
+        raise ValueError(f"n must be >= 1, got {n}")
     from ..sources import balance_partitions
 
     # grams shuffle as raw strings: an xxhash64 pre-key was A/B-measured
@@ -168,27 +173,12 @@ def ngram_jaccard_pairs(
         F.array_sort(F.collect_list(F.struct("id", "sz"))).alias("ids")
     )
 
-    # pairs (ids[i], ids[j>i]) without materializing the full pair array:
-    # posexplode each sorted list, then explode the suffix after position
-    # i — generator output streams through codegen, per-row allocation is
-    # one slice instead of a flattened d(d-1)/2 struct array. Structs
-    # sort by (id, sz) = by id (ids unique per list), so id_a < id_b.
-    x1 = enriched.select("ids", F.posexplode("ids").alias("i", "a"))
-    x2 = x1.select(
+    # structs sort by (id, sz) = by id (ids unique per list), so
+    # id_a < id_b; the sizes ride along inside the pair structs
+    inter = suffix_pairs(enriched, "ids").groupBy(
         F.col("a.id").alias("id_a"),
-        F.col("a.sz").alias("size_a"),
-        F.explode(
-            F.slice(
-                "ids",
-                F.col("i") + 2,
-                F.greatest(F.size("ids") - F.col("i") - 1, F.lit(0)),
-            )
-        ).alias("b"),
-    )
-    inter = x2.groupBy(
-        "id_a",
         F.col("b.id").alias("id_b"),
-        "size_a",
+        F.col("a.sz").alias("size_a"),
         F.col("b.sz").alias("size_b"),
     ).agg(F.count(F.lit(1)).alias("inter_cnt"))
     jac = F.col("inter_cnt") / (
@@ -694,8 +684,8 @@ def prefix_jaccard_pairs(
     ``|s| - ceil(t * |s|) + 1`` elements in that order — so only the
     PREFIX of each document is exploded into the inverted index, and
     candidate pairs are generated per prefix-gram posting list
-    exactly like :func:`ngram_jaccard_pairs` (posexplode +
-    suffix-slice, i < j). Frequent grams land at the END of the order,
+    exactly like :func:`ngram_jaccard_pairs` (``suffix_pairs``,
+    i < j). Frequent grams land at the END of the order,
     so the posting lists that would explode quadratically are
     precisely the ones the prefix bound keeps OUT of the index —
     which is why NO ``max_df`` cut is needed here: the result is
@@ -784,18 +774,11 @@ def prefix_jaccard_pairs(
     posting = pre.groupBy("ptok").agg(
         F.array_sort(F.collect_list("e")).alias("es")
     )
-    x1 = posting.select("es", F.posexplode("es").alias("i", "a"))
-    raw = x1.select(
+    raw = suffix_pairs(posting, "es").select(
         F.col("a.doc_id").alias("id_a"),
         F.col("a.pos").alias("pa"),
         F.col("a.sz").alias("sza"),
-        F.explode(
-            F.slice(
-                "es",
-                F.col("i") + 2,
-                F.greatest(F.size("es") - F.col("i") - 1, F.lit(0)),
-            )
-        ).alias("b"),
+        "b",
     )
     # PPJoin pruning, exact integer arithmetic (t = num/den via the
     # float threshold cross-multiplied against IEEE-exact small ints):
@@ -1080,8 +1063,6 @@ def blocking_volume(
     Reference scope note: no join diagnostics exist in the reference
     (SURVEY.md §2.6); north-star extension surface.
     """
-    from .cluster import checked_long
-
     bc = list(block_cols)
     sizes = df.groupBy(*bc).agg(F.count(F.lit(1)).alias("block_size"))
     return (

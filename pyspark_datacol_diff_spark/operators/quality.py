@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from . import PPM
+from . import PPM, checked_long
 
 
 def check_rules(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
@@ -356,61 +356,44 @@ def cusum(
     )
 
 
-def ks_statistic(
+def _two_sample_prefix(
     df: DataFrame,
     group_col: str,
     value_col: str,
     group_a,
     group_b,
-    *,
-    bucket_width: int = 1000,
-) -> DataFrame:
-    """EXACT two-sample KOLMOGOROV-SMIRNOV statistic between two
-    groups' value distributions, in integer ppm — the
-    distribution-drift gate one rung above binned relative-frequency
-    comparison (:func:`distribution_drift` sees only the bins you
-    chose; KS is the sup-norm over EVERY threshold):
-    ``ks_ppm = max over distinct values v of
-    |cum_a(v) * n_b - cum_b(v) * n_a| * PPM DIV (n_a * n_b)``
-    — the cross-multiplied integer rendering of
-    ``max |F_a(v) - F_b(v)|``, so the statistic replays bit-for-bit
-    with no float CDF. Compare against the usual
-    ``c(alpha) * sqrt((n_a+n_b)/(n_a*n_b))`` client-side.
+    bucket_width: int,
+    caller: str,
+) -> tuple[DataFrame, int, int]:
+    """The distributed prefix sum under the two-sample statistics.
+    Returns ``(cum, n_a, n_b)``: ``cum`` holds one row per distinct
+    non-NULL value with its per-group counts ``ca`` / ``cb`` and the
+    INCLUSIVE running counts ``cum_a`` / ``cum_b`` in value order;
+    ``n_a`` / ``n_b`` are the group sizes as driver ints.
 
-    Scale shape: one map-combined aggregate to distinct
-    (group, value) counts (the relation every later stage sees is
-    value-cardinality-sized, not row-count-sized), then the TWO-PHASE
-    distributed prefix sum (the running_total dataflow — per-bucket
-    local window + driver-gathered bucket offsets as a literal map
-    projection; never a SinglePartition window over the values).
-    ``bucket_width`` partitions the value domain for phase 1 —
-    per-bucket totals are collected, so pick a width that bounds
-    ``domain / width`` (the repo's bounded-collect contract; the
-    default 1000 puts cents-scale domains at thousands of buckets).
-    Final reduction is a 1-row max aggregate; the 128-bit
-    cross-products run in DECIMAL(38,0).
+    Scale shape: one map-combined aggregate to distinct (value) grain,
+    then the TWO-PHASE prefix sum (the running_total dataflow):
+    ``bucket_width`` partitions the value domain, each bucket runs a
+    local window, and the per-bucket totals are collected — pick a
+    width that bounds ``domain / width`` (the repo's bounded-collect
+    contract) — and added back as literal offset maps. Never a
+    SinglePartition window over the values.
 
-    Returns one row ``(n_a, n_b, ks_ppm)``. Raises ``ValueError`` when
-    either group is empty after NULL filtering (the statistic is
-    undefined; Spark and DuckDB would otherwise diverge — NULL vs
-    division error) or when ``value_col`` casts to NULL BIGINT
-    (non-numeric values have no position in the value order).
-
-    Reference scope note: no statistics exist in the reference
-    (SURVEY.md §2.7); north-star extension surface.
-    """
+    Raises ``ValueError`` naming ``caller`` when either group is empty
+    after NULL filtering — the statistic is undefined, and Spark's DIV
+    would yield NULL where DuckDB's // raises, so both worlds get the
+    same typed error — or when ``value_col`` casts to a NULL BIGINT
+    bucket key (non-numeric values have no position in the value
+    order)."""
     from pyspark.sql import Window
 
     base = df.filter(
         F.col(value_col).isNotNull()
         & F.col(group_col).isin([group_a, group_b])
     )
-    vc = (
-        base.groupBy(value_col)
-        .agg(
-            F.sum((F.col(group_col) == group_a).cast("long")).alias("ca"),
-            F.sum((F.col(group_col) == group_b).cast("long")).alias("cb"),
-        )
+    vc = base.groupBy(value_col).agg(
+        F.sum((F.col(group_col) == group_a).cast("long")).alias("ca"),
+        F.sum((F.col(group_col) == group_b).cast("long")).alias("cb"),
     )
     # DIV over a PRE-ALIASED internal column: exact integer semantics
     # without interpolating the caller's column name into SQL text
@@ -442,34 +425,76 @@ def ks_statistic(
             "no position in the value ordering — cast or filter such "
             "rows first (running_total's contract)"
         )
-    totals = sorted(raw_totals)
     off_a, off_b, acc_a, acc_b = {}, {}, 0, 0
-    for key, ta, tb in totals:
+    for key, ta, tb in sorted(raw_totals):
         off_a[key], off_b[key] = acc_a, acc_b
         acc_a += ta or 0
         acc_b += tb or 0
-    # empty-group guard: an empty side makes the statistic undefined —
-    # Spark's DIV would yield NULL while DuckDB's // raises, and this
-    # engine's contract is bit-replayable cross-engine semantics, so
-    # raise the same typed error in both worlds instead of diverging
     if acc_a == 0 or acc_b == 0:
         local.unpersist()
         raise ValueError(
-            f"ks_statistic needs non-empty samples on both sides: "
+            f"{caller} needs non-empty samples on both sides: "
             f"group_a={group_a!r} has {acc_a} rows, group_b={group_b!r} "
             f"has {acc_b} rows (after NULL-value filtering)"
         )
     map_a = F.create_map(*[F.lit(x) for kv in off_a.items() for x in kv])
     map_b = F.create_map(*[F.lit(x) for kv in off_b.items() for x in kv])
     cum = local.select(
+        "ca",
+        "cb",
         (F.col("__la") + map_a[F.col("__pb")]).alias("cum_a"),
         (F.col("__lb") + map_b[F.col("__pb")]).alias("cum_b"),
     )
-    tot = vc.select(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
+    return cum, acc_a, acc_b
+
+
+def ks_statistic(
+    df: DataFrame,
+    group_col: str,
+    value_col: str,
+    group_a,
+    group_b,
+    *,
+    bucket_width: int = 1000,
+) -> DataFrame:
+    """EXACT two-sample KOLMOGOROV-SMIRNOV statistic between two
+    groups' value distributions, in integer ppm — the
+    distribution-drift gate one rung above binned relative-frequency
+    comparison (:func:`distribution_drift` sees only the bins you
+    chose; KS is the sup-norm over EVERY threshold):
+    ``ks_ppm = max over distinct values v of
+    |cum_a(v) * n_b - cum_b(v) * n_a| * PPM DIV (n_a * n_b)``
+    — the cross-multiplied integer rendering of
+    ``max |F_a(v) - F_b(v)|``, so the statistic replays bit-for-bit
+    with no float CDF. Compare against the usual
+    ``c(alpha) * sqrt((n_a+n_b)/(n_a*n_b))`` client-side.
+
+    Scale shape: the value-grain two-phase prefix sum of
+    :func:`_two_sample_prefix` (the default ``bucket_width`` 1000 puts
+    cents-scale domains at thousands of collected bucket totals), then
+    a 1-row max aggregate with ``n_a`` / ``n_b`` as literals; the
+    128-bit cross-products run in DECIMAL(38,0).
+
+    Returns one row ``(n_a, n_b, ks_ppm)``. Raises ``ValueError`` when
+    either group is empty after NULL filtering (the statistic is
+    undefined; Spark and DuckDB would otherwise diverge — NULL vs
+    division error) or when ``value_col`` casts to NULL BIGINT
+    (non-numeric values have no position in the value order).
+
+    Reference scope note: no statistics exist in the reference
+    (SURVEY.md §2.7); north-star extension surface.
+    """
+    cum, na, nb = _two_sample_prefix(
+        df, group_col, value_col, group_a, group_b, bucket_width,
+        "ks_statistic",
     )
     return (
-        cum.crossJoin(F.broadcast(tot))
+        cum.select(
+            F.lit(na).cast("long").alias("n_a"),
+            F.lit(nb).cast("long").alias("n_b"),
+            "cum_a",
+            "cum_b",
+        )
         .select(
             "n_a",
             "n_b",
@@ -590,8 +615,6 @@ def spearman_ppm(
     """
     from pyspark.sql import Window
 
-    from .cluster import checked_long
-
     gc = list(group_cols)
     ties = list(tiebreak_cols)
     if not ties:
@@ -668,8 +691,6 @@ def chi2_ppm(
     Reference scope note: no statistics exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    from .cluster import checked_long
-
     obs = df.groupBy(
         F.col(row_col).alias("__r"), F.col(col_col).alias("__c")
     ).agg(F.count(F.lit(1)).alias("__o"))
@@ -749,13 +770,11 @@ def mann_whitney_u2(
     checked BIGINT cast (u2 <= 2*n_a*n_b, so n_a*n_b < 4.6e18 — beyond
     that the statistic itself outgrows int64 and the cast raises).
 
-    Scale shape (shared with :func:`ks_statistic`): one map-combined
-    aggregate to distinct (value) grain, the TWO-PHASE distributed
-    prefix sum over the value order (per-bucket local window +
-    driver-gathered bucket offsets as a literal map — never a
-    SinglePartition window), one 1-row reduce. Raises ``ValueError``
-    on an empty side (statistic undefined; Spark/DuckDB would diverge)
-    and on NULL bucket keys (non-numeric values have no rank).
+    Scale shape (shared with :func:`ks_statistic`): the two-phase
+    prefix sum of :func:`_two_sample_prefix`, then one 1-row reduce.
+    Raises ``ValueError`` on an empty side (statistic undefined;
+    Spark/DuckDB would diverge) and on NULL bucket keys (non-numeric
+    values have no rank).
 
     Returns one row ``(n_a, n_b, u2_a, u2_b, auc_ppm)`` — ``auc_ppm``
     is the common-language effect size ``U_a / (n_a*n_b)`` in exact
@@ -766,72 +785,18 @@ def mann_whitney_u2(
     Reference scope note: no statistics exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    from pyspark.sql import Window
-
-    from .cluster import checked_long
-
-    base = df.filter(
-        F.col(value_col).isNotNull()
-        & F.col(group_col).isin([group_a, group_b])
+    cum, na, nb = _two_sample_prefix(
+        df, group_col, value_col, group_a, group_b, bucket_width,
+        "mann_whitney_u2",
     )
-    vc = base.groupBy(value_col).agg(
-        F.sum((F.col(group_col) == group_a).cast("long")).alias("ca"),
-        F.sum((F.col(group_col) == group_b).cast("long")).alias("cb"),
-    )
-    b = vc.withColumn("__vb", F.col(value_col).cast("bigint")).withColumn(
-        "__pb", F.expr(f"__vb DIV {int(bucket_width)}")
-    )
-    w = (
-        Window.partitionBy("__pb")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = (
-        b.withColumn("__t", F.col("ca") + F.col("cb"))
-        .withColumn("__lt", F.sum("__t").over(w))
-        .persist()
-    )
-    raw_totals = [
-        (r["__pb"], r["ta"], r["tb"])
-        for r in local.groupBy("__pb")
-        .agg(F.sum("ca").alias("ta"), F.sum("cb").alias("tb"))
-        .collect()
-    ]
-    if any(k is None for k, _, _ in raw_totals):
-        local.unpersist()
-        raise ValueError(
-            f"{value_col} produced NULL bucket keys (non-numeric or "
-            "BIGINT-overflowing values cast to NULL): a NULL bucket has "
-            "no position in the value ordering — cast or filter such "
-            "rows first (running_total's contract)"
-        )
-    totals = sorted(raw_totals)
-    off_t, acc_a, acc_b, acc_t = {}, 0, 0, 0
-    for key, ta, tb in totals:
-        off_t[key] = acc_t
-        acc_a += ta or 0
-        acc_b += tb or 0
-        acc_t += (ta or 0) + (tb or 0)
-    if acc_a == 0 or acc_b == 0:
-        local.unpersist()
-        raise ValueError(
-            f"mann_whitney_u2 needs non-empty samples on both sides: "
-            f"group_a={group_a!r} has {acc_a} rows, group_b={group_b!r} "
-            f"has {acc_b} rows (after NULL-value filtering)"
-        )
-    map_t = F.create_map(*[F.lit(x) for kv in off_t.items() for x in kv])
     # exclusive both-group prefix: inclusive cum minus this value's own t
-    r2 = local.select(
-        F.expr(
-            "CAST(ca AS DECIMAL(38,0))"
-        ).alias("__ca_d"),
-        (
-            (F.col("__lt") + map_t[F.col("__pb")] - F.col("__t")) * 2
-            + F.col("__t")
-            + F.lit(1)
-        ).alias("__2r_term"),
+    t = F.col("ca") + F.col("cb")
+    r2 = cum.select(
+        F.expr("CAST(ca AS DECIMAL(38,0))").alias("__ca_d"),
+        ((F.col("cum_a") + F.col("cum_b") - t) * 2 + t + F.lit(1)).alias(
+            "__2r_term"
+        ),
     ).agg(F.sum(F.col("__ca_d") * F.col("__2r_term")).alias("__2ra"))
-    na, nb = acc_a, acc_b
     u2a = F.expr(f"__2ra - CAST({na} AS DECIMAL(38,0)) * {na + 1}")
     return r2.select(
         F.lit(na).cast("long").alias("n_a"),
@@ -903,8 +868,6 @@ def autocorr_ppm(
     (SURVEY.md §2.7); north-star extension surface.
     """
     from pyspark.sql import Window
-
-    from .cluster import checked_long
 
     if lag < 1:
         raise ValueError(f"lag must be >= 1, got {lag}")
@@ -1002,8 +965,6 @@ def cohens_kappa_ppm(
     Reference scope note: no statistics exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    from .cluster import checked_long
-
     obs = df.groupBy(
         F.col(rater_a_col).alias("__a"), F.col(rater_b_col).alias("__b")
     ).agg(F.count(F.lit(1)).alias("__o"))
@@ -1112,8 +1073,6 @@ def pettitt_changepoint(
     (SURVEY.md §2.7); north-star extension surface.
     """
     from pyspark.sql import Window
-
-    from .cluster import checked_long
 
     gc = list(group_cols)
     ties = list(tiebreak_cols)
@@ -1244,8 +1203,6 @@ def gini_concentration_ppm(
     """
     from pyspark.sql import Window
 
-    from .cluster import checked_long
-
     gc = list(group_cols)
     ties = list(tiebreak_cols)
     if not ties:
@@ -1337,8 +1294,6 @@ def fano_factor_ppm(
     Reference scope note: no statistics exist in the reference
     (SURVEY.md §2.7); north-star extension surface.
     """
-    from .cluster import checked_long
-
     gc = list(group_cols)
     b = df.filter(F.col(ts_col).isNotNull()).select(
         *gc, F.date_trunc(bucket, F.col(ts_col)).alias("__bkt")

@@ -59,7 +59,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import md5_int60
+from . import checked_long, md5_int60
 
 __all__ = [
     "heavy_hitters",
@@ -499,7 +499,6 @@ def kmv_distinct(
     """
     from pyspark.sql import Window
 
-    from .cluster import checked_long
     from .text import tokens
 
     if k < 2:

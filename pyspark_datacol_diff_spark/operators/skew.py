@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import checked_long
+
 _SALT = "__dcd_salt"
 
 
@@ -139,7 +141,7 @@ def join_skew_probe(
     itself a finding), and a TakeOrdered top-k — never a global sort.
     The product runs in DECIMAL(38,0) (two billion-row sides would
     overflow int64) and is emitted as DECIMAL->BIGINT after the top-k
-    cut through :func:`cluster.checked_long` — the top-k SURVIVORS are
+    cut through :func:`checked_long` — the top-k SURVIVORS are
     by selection the LARGEST products, exactly the values that could
     exceed int64, and non-ANSI Spark's plain cast would silently NULL
     them while the DuckDB oracle's BIGINT multiply raises. A loud
@@ -185,8 +187,6 @@ def join_skew_probe(
     prod = F.expr(
         "CAST(CAST(n_left AS DECIMAL(38,0)) * n_right AS DECIMAL(38,0))"
     )
-    from .cluster import checked_long
-
     rank = prod
     if metric == "outer_rows":
         rank = F.expr(

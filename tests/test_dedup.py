@@ -1,9 +1,16 @@
 """Dedup-operator tests on constructed corpora with known duplicate
 structure (exact groups, near-dups with hand-computable Jaccard)."""
 
+import itertools
+from collections import Counter
+
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pyspark_datacol_diff_spark.operators import dedup as DD
+from pyspark_datacol_diff_spark.operators import suffix_pairs
 
 
 def corpus(spark):
@@ -59,6 +66,56 @@ def test_ngram_jaccard_pairs(spark):
     assert 0.5 <= got[(0, 2)] < 1.0
     # no cross-filler pairs
     assert all(a <= 3 and b <= 3 for a, b in got)
+
+
+def test_ngram_jaccard_rejects_bad_width_and_threshold(spark):
+    """A gram width below 1 used to mine unigram pairs (docs "a b c" /
+    "c b a" paired at n=0) and a threshold above 1 silently returned no
+    pairs; both now raise like prefix_jaccard_pairs. 0 stays valid:
+    ngram_containment_pairs mines at threshold 0."""
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "c b a")], "doc_id long, text string"
+    )
+    for n in (0, -1):
+        with pytest.raises(ValueError, match="n must be"):
+            DD.ngram_jaccard_pairs(df, "doc_id", "text", n=n)
+    for t in (1.5, -0.1):
+        with pytest.raises(ValueError, match="threshold"):
+            DD.ngram_jaccard_pairs(df, "doc_id", "text", threshold=t)
+    assert DD.ngram_jaccard_pairs(
+        df, "doc_id", "text", n=1, threshold=0.0
+    ).count() == 1
+
+
+_sorted_lists = st.lists(
+    st.integers(-40, 40), unique=True, max_size=7
+).map(sorted)
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[
+        HealthCheck.function_scoped_fixture,
+        HealthCheck.too_slow,
+    ],
+)
+@given(lists=st.lists(_sorted_lists, min_size=1, max_size=5))
+@example(lists=[[], [7], [1, 2], [-3, 0, 4, 9]])
+def test_suffix_pairs_are_the_combinations(spark, lists):
+    """suffix_pairs yields exactly itertools.combinations(lst, 2) per
+    row, as a multiset, with the carried columns unchanged."""
+    rows = [(i, f"t{i % 2}", lst) for i, lst in enumerate(lists)]
+    df = spark.createDataFrame(rows, "rid long, tag string, arr array<long>")
+    got = Counter(
+        tuple(r) for r in suffix_pairs(df, "arr", "rid", "tag").collect()
+    )
+    want = Counter(
+        (rid, tag, a, b)
+        for rid, tag, lst in rows
+        for a, b in itertools.combinations(lst, 2)
+    )
+    assert got == want
 
 
 def test_minhash_estimates_track_exact_jaccard(spark):

@@ -61,9 +61,7 @@ class TestJoinSkewProbeCheckedCast:
         # just over int64 max) are not materializable in a unit test, so
         # pin the exact cast expression the probe emits at the unit
         # level: checked_long over the DECIMAL(38,0) product.
-        from pyspark_datacol_diff_spark.operators.cluster import (
-            checked_long,
-        )
+        from pyspark_datacol_diff_spark.operators import checked_long
 
         n = 3_037_000_500
         df = spark.createDataFrame([(n, n)], ["a", "b"]).select(

@@ -8,10 +8,8 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from pyspark_datacol_diff_spark.operators.cluster import (
-    checked_long,
-    drop_near_dups,
-)
+from pyspark_datacol_diff_spark.operators import checked_long
+from pyspark_datacol_diff_spark.operators.cluster import drop_near_dups
 from pyspark_datacol_diff_spark.operators.cooccur import (
     association_rules,
     cooccurrence_stats,
